@@ -2,8 +2,6 @@
 (``BatchUpdate.py <file> {-f|-s|-u}``, :114-136) on the Spark engine.
 
 Differences by design:
-- stages chain lazily in one Catalyst plan; pass ``--materialize`` to
-  write each stage boundary like the reference did;
 - the interactive "update without reviewing?" gate (:127-132) becomes
   an explicit ``--yes`` flag;
 - ``--strict-reference-mode`` reproduces the reference's latent bugs

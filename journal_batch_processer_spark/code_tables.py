@@ -2,10 +2,9 @@
 
 The reference keeps these as module-level dicts (BatchUpdate.py:40-77)
 and does a per-row dict lookup at upload time (BatchUpdate.py:504,517).
-Here each table is a tiny dimension DataFrame that gets BROADCAST
-into joins — the 100 TB-correct shape for a <100-row dimension —
-plus a literal ``create_map`` expression for pure-projection use
-(no join at all; the map folds into whole-stage codegen).
+Here each table becomes a literal ``create_map`` expression: a
+pure projection with no join at all — the map folds into whole-stage
+codegen, which beats even a broadcast join for a <100-row domain.
 
 The table *contents* are data parity with the reference, not code.
 """
@@ -14,7 +13,7 @@ from __future__ import annotations
 
 from itertools import chain
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # description -> code, keyed by column name (BatchUpdate.py:40-77).
@@ -64,12 +63,6 @@ CODE_TABLES: dict[str, dict[str, str]] = {
 }
 
 
-def code_table_df(spark: SparkSession, column: str) -> DataFrame:
-    """The code table for ``column`` as a (description, code) dimension."""
-    rows = [(desc, code) for desc, code in CODE_TABLES[column].items()]
-    return spark.createDataFrame(rows, "description string, code string")
-
-
 def code_map_expr(column: str) -> Column:
     """Literal map expression description->code; folds into codegen.
 
@@ -101,18 +94,3 @@ def code_validate(df: DataFrame, column: str, src_col: str) -> DataFrame:
     """
     domain = list(CODE_TABLES[column].keys())
     return df.filter(~F.col(src_col).isin(domain))
-
-
-def broadcast_code_join(
-    df: DataFrame, spark: SparkSession, column: str, src_col: str, out_col: str
-) -> DataFrame:
-    """Join-based variant of :func:`code_lookup` (broadcast hash join).
-
-    Kept for parity with dimension-join workloads where the dimension
-    is a real table rather than a literal.
-    """
-    dim = code_table_df(spark, column)
-    joined = df.join(
-        F.broadcast(dim), df[src_col] == dim["description"], "left"
-    ).withColumnRenamed("code", out_col)
-    return joined.drop("description")

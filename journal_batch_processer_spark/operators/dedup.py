@@ -28,12 +28,12 @@ from ..cache import pin
 # 31-bit Mersenne prime keeps a*h+b < 2^47 — no ANSI long overflow
 _MERSENNE = (1 << 31) - 1
 
-# near_dup_pairs broadcasts its candidate-pair relation only below
-# this EXACT row count (2M pairs of two longs ≈ 64 MB hashed — far
-# under any executor budget); above it, shuffle_hash. See the gate
-# comment in near_dup_pairs.
-_CAND_BROADCAST_MAX = 2_000_000
-
+# Float guard for the prefix filters: t*sz can land an ulp above the
+# exact product (e.g. 150/3 → 50.000000000000007), and ceil would then
+# SHORTEN a prefix or RAISE a required-overlap bound — a false-negative
+# source. The epsilon only ever relaxes a bound (more candidates), and
+# the verify step removes every false positive, so exactness holds.
+_EPS = 1e-9
 
 _MASK64 = (1 << 64) - 1
 
@@ -104,21 +104,6 @@ def tokens_col(text: F.Column) -> F.Column:
     return F.split(F.lower(text), " ")
 
 
-def shingles_col(text: F.Column, n: int = 3) -> F.Column:
-    """Distinct n-gram shingles (space-joined token windows).
-
-    Guarded for short texts: Spark's ``sequence(1, 0)`` DESCENDS
-    instead of being empty, so gate on token count first.
-    """
-    toks = tokens_col(text)
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
 def shingle_table(
     df: DataFrame, id_col: str, text_col: str, n: int = 3,
     spread: bool = True,
@@ -169,6 +154,139 @@ def shingle_table(
     return base.select("doc", F.explode(F.array_distinct(g)).alias("shingle"))
 
 
+def _hashed_shingles(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_shingle_df: int | None,
+    doc_keyed: bool = True,
+    keep_str: bool = False,
+) -> DataFrame:
+    """Distinct (doc, shingle) rows with the shingle replaced by its
+    8-byte xxhash64, so joins, windows and verify arrays move longs,
+    not ~25-byte strings (~26% faster at sf0.1 from shuffle volume
+    alone; identical output absent hash collisions, <<1 expected below
+    ~10^9 distinct shingles — above that swap in the 16-byte
+    unhex(md5) key).
+
+    ``max_shingle_df`` drops shingles appearing in more than N docs
+    BEFORE any size is taken, so every generator that accepts the cap
+    sees the same sets and denominators — which is what keeps the
+    naive and prefix paths output-identical for identical arguments.
+
+    ``doc_keyed``: the self-join generators read the table three times
+    (both join sides and the per-doc size aggregate), so it is spread
+    by doc and pinned; the prefix generators re-partition by shingle
+    first (their rank window), so they get it unspread and unpinned.
+    ``keep_str`` carries the shingle string as ``shingle_str`` for
+    portable rank tie-breaks.
+    """
+    sel = ["doc", F.xxhash64("shingle").alias("shingle")]
+    if keep_str:
+        sel.append(F.col("shingle").alias("shingle_str"))
+    sh = shingle_table(df, id_col, text_col, n, spread=doc_keyed).select(*sel)
+    if doc_keyed:
+        sh = pin(sh)
+    if max_shingle_df is not None:
+        ok = (
+            sh.groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("df_"))
+            .filter(F.col("df_") <= max_shingle_df)
+            .select("shingle")
+        )
+        sh = sh.join(F.broadcast(ok), "shingle")
+    return sh
+
+
+def _self_join_overlap(sh: DataFrame, directed: bool) -> DataFrame:
+    """(doc_a, doc_b, inter, sz_a, sz_b) for every doc pair sharing a
+    shingle, by exploded self-join on the shingle. ``directed`` keeps
+    both orders of each pair (doc_a != doc_b), else doc_a < doc_b."""
+    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
+    a = sh.select(F.col("doc").alias("doc_a"), "shingle")
+    b = sh.select(F.col("doc").alias("doc_b"), "shingle")
+    keep = (
+        F.col("doc_a") != F.col("doc_b")
+        if directed
+        else F.col("doc_a") < F.col("doc_b")
+    )
+    inter = (
+        a.join(b, "shingle")
+        .filter(keep)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"))
+    return (
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select("doc_a", "doc_b", "inter", "sz_a", "sz_b")
+    )
+
+
+def _array_verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """Exact (doc_a, doc_b, inter, sz_a, sz_b) for the candidate pairs
+    in ``cand`` (doc_a, doc_b) over the (doc, shingle) rows of ``sh``.
+
+    Verifies on per-doc shingle arrays instead of re-joining the
+    exploded shingle table: the arrays relation is one row per doc, so
+    AQE broadcasts it at test scale and it stays an equi-join (never
+    all-pairs) at corpus scale, moving Σ_pairs(|A|+|B|) values once
+    per side with no post-join aggregate. array_intersect over
+    distinct elements gives the exact intersection count, and the
+    sizes come free as array lengths."""
+    arrs = sh.groupBy("doc").agg(F.collect_list("shingle").alias("arr"))
+    aa = arrs.select(F.col("doc").alias("doc_a"), F.col("arr").alias("arr_a"))
+    ab = arrs.select(F.col("doc").alias("doc_b"), F.col("arr").alias("arr_b"))
+    return (
+        cand.join(aa, "doc_a")
+        .join(ab, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("arr_a", "arr_b")).alias("inter"),
+            F.size("arr_a").alias("sz_a"),
+            F.size("arr_b").alias("sz_b"),
+        )
+    )
+
+
+def _rarest_first(sh: DataFrame, cap: int | None = None) -> DataFrame:
+    """Pinned (doc, shingle, rnk, sz) for the prefix generators: ``rnk``
+    orders each doc's shingles rarest-first (document frequency, then
+    the hashed shingle), ``sz`` is the set size. Window counts, not
+    aggregate+join rounds: one exchange on shingle, one on doc (rnk and
+    sz share the doc partitioning). Pinned because the prefix branch
+    and the verify arrays both read it.
+
+    ``cap`` truncates each doc to its ``cap`` rarest shingles and sizes
+    it accordingly; rank ties then break on ``shingle_str`` (see
+    :func:`ngram_jaccard_pairs_prefix`)."""
+    tie = "shingle_str" if cap is not None else "shingle"
+    w_doc = Window.partitionBy("doc")
+    ranked = (
+        sh.withColumn("df_", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
+        .withColumn("rnk", F.row_number().over(w_doc.orderBy("df_", tie)))
+        .withColumn("sz", F.count(F.lit(1)).over(w_doc))
+    )
+    if cap is not None:
+        ranked = ranked.filter(F.col("rnk") <= cap).withColumn(
+            "sz", F.least(F.col("sz"), F.lit(cap))
+        )
+    return pin(ranked.select("doc", "shingle", "rnk", "sz"))
+
+
+def _prefix_len(t: float) -> F.Column:
+    """Prefix length ``sz - ceil(t·sz) + 1`` of a ``_rarest_first`` row."""
+    return F.col("sz") - F.ceil(F.lit(t) * F.col("sz") - _EPS) + 1
+
+
+def _jaccard() -> F.Column:
+    return F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -183,45 +301,12 @@ def ngram_jaccard_pairs(
     before the join — the skew guard that keeps the candidate join
     linear-ish at scale.
     """
-    # Persist: the shingle table feeds both join sides AND the size
-    # aggregate (at cluster scale this materialization is a written
-    # shingle table). Join key is the 8-byte xxhash64 of the shingle,
-    # not the ~25-byte string — ~26% faster at sf0.1 from shuffle
-    # volume alone, identical output absent hash collisions (<<1
-    # expected below ~10^9 distinct shingles; above that swap in the
-    # 16-byte unhex(md5) key).
-    sh = pin(
-        shingle_table(df, id_col, text_col, n)
-        .select("doc", F.xxhash64("shingle").alias("shingle"))
-    )
-    if max_shingle_df is not None:
-        w_ok = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-        sh = sh.join(
-            F.broadcast(w_ok.filter(F.col("df_") <= max_shingle_df).select("shingle")),
-            "shingle",
-        )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-
-    a = sh.select(F.col("doc").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"))
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
+    sh = _hashed_shingles(df, id_col, text_col, n, max_shingle_df)
+    return (
+        _self_join_overlap(sh, directed=False)
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
     )
-    return out.select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
 
 
 def ngram_containment_pairs(
@@ -249,35 +334,12 @@ def ngram_containment_pairs(
     one, which is exactly the pair we want), so the df cap is the
     scale path here.
     """
-    sh = pin(
-        shingle_table(df, id_col, text_col, n)
-        .select("doc", F.xxhash64("shingle").alias("shingle"))
-    )
-    if max_shingle_df is not None:
-        w_ok = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-        sh = sh.join(
-            F.broadcast(w_ok.filter(F.col("df_") <= max_shingle_df).select("shingle")),
-            "shingle",
-        )
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-
-    a = sh.select(F.col("doc").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"))
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+    sh = _hashed_shingles(df, id_col, text_col, n, max_shingle_df)
+    return (
+        _self_join_overlap(sh, directed=True)
         .withColumn("containment", F.col("inter") / F.col("sz_a"))
         .filter(F.col("containment") >= threshold)
     )
-    return out.select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "containment")
 
 
 def ngram_containment_pairs_prefix(
@@ -316,32 +378,13 @@ def ngram_containment_pairs_prefix(
     changes the sets, hence the denominators) so the two paths stay
     comparable — at scale, prefer leaving it None here.
     """
-    eps = 1e-9
     t = float(threshold)
-    sh = shingle_table(df, id_col, text_col, n, spread=False).select(
-        "doc", F.xxhash64("shingle").alias("shingle")
+    annotated = _rarest_first(
+        _hashed_shingles(df, id_col, text_col, n, max_shingle_df, doc_keyed=False)
     )
-    if max_shingle_df is not None:
-        w_ok = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-        sh = sh.join(
-            F.broadcast(w_ok.filter(F.col("df_") <= max_shingle_df).select("shingle")),
-            "shingle",
-        )
-    # df rank (rarest first, hash tiebreak) + set size via windows —
-    # one exchange on shingle, one on doc, same shape as the PPJoin op
-    w_sh = Window.partitionBy("shingle")
-    w_doc = Window.partitionBy("doc")
-    annotated = pin(
-        sh.withColumn("df_", F.count(F.lit(1)).over(w_sh))
-        .withColumn("rnk", F.row_number().over(w_doc.orderBy("df_", "shingle")))
-        .withColumn("sz", F.count(F.lit(1)).over(w_doc))
-        .select("doc", "shingle", "rnk", "sz")
-    )
+    alpha_a = F.ceil(F.lit(t) * F.col("sz_a") - _EPS)  # required overlap
     # probe side: contained-candidate prefixes only
-    alpha_a = F.ceil(F.lit(t) * F.col("sz_a") - eps)  # required overlap
-    probe = annotated.filter(
-        F.col("rnk") <= F.col("sz") - F.ceil(F.lit(t) * F.col("sz") - eps) + 1
-    ).select(
+    probe = annotated.filter(F.col("rnk") <= _prefix_len(t)).select(
         F.col("doc").alias("doc_a"),
         "shingle",
         F.col("rnk").alias("rnk_a"),
@@ -360,22 +403,10 @@ def ngram_containment_pairs_prefix(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    arrs = annotated.groupBy("doc").agg(F.collect_list("shingle").alias("arr"))
-    aa = arrs.select(F.col("doc").alias("doc_a"), F.col("arr").alias("arr_a"))
-    ab = arrs.select(F.col("doc").alias("doc_b"), F.col("arr").alias("arr_b"))
     return (
-        cand.join(aa, "doc_a")
-        .join(ab, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("arr_a", "arr_b")).alias("inter"),
-            F.size("arr_a").alias("sz_a"),
-            F.size("arr_b").alias("sz_b"),
-        )
+        _array_verify(cand, annotated)
         .withColumn("containment", F.col("inter") / F.col("sz_a"))
         .filter(F.col("containment") >= threshold)
-        .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "containment")
     )
 
 
@@ -418,67 +449,21 @@ def ngram_jaccard_pairs_prefix(
     _capped is value-checked end-to-end; hash-order capping would be
     equally valid but unverifiable in DuckDB, which lacks xxhash64).
     """
-    # Float guard: t*sz can land an ulp above the exact product (e.g.
-    # 150/3 → 50.000000000000007), and ceil would then SHORTEN a prefix
-    # or RAISE a required-overlap bound — a false-negative source. The
-    # epsilon only ever relaxes a bound (more candidates), and the
-    # verify step removes every false positive, so exactness holds.
-    eps = 1e-9
     t = float(threshold)
-
-    # 8-byte hashed shingles end-to-end: window ranks, candidate join,
-    # and verify arrays all move longs, not ~25-byte strings (same
-    # collision caveat as ngram_jaccard_pairs; the prefix CHOICE
-    # tie-breaks by hash instead of string — a different but equally
-    # deterministic order, and verification makes the output identical
-    # either way)
     cap = max_shingles_per_doc
-    sel = ["doc", F.xxhash64("shingle").alias("shingle")]
-    if cap is not None:
-        if cap < 1:
-            raise ValueError(f"max_shingles_per_doc must be >= 1, got {cap}")
-        # keep the string ONLY to order rank ties portably; it is
-        # dropped before the persisted relation, so the candidate join
-        # and verify arrays still move 8-byte longs
-        sel.append(F.col("shingle").alias("shingle_str"))
-    sh = shingle_table(df, id_col, text_col, n, spread=False).select(*sel)
-    if max_shingle_df is not None:
-        # stop-shingle pre-filter with the SAME semantics as the naive
-        # generator's cap (drop shingles in > N docs BEFORE sizes are
-        # taken, so denominators match and the two paths stay
-        # output-identical for identical arguments — what lets
-        # ngram_jaccard_pairs_auto switch freely)
-        w_ok = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-        sh = sh.join(
-            F.broadcast(w_ok.filter(F.col("df_") <= max_shingle_df).select("shingle")),
-            "shingle",
-        )
-
-    # Document frequency, rarest-first rank, and set size as WINDOW
-    # counts, not aggregate+join rounds: one exchange on shingle, one
-    # on doc (rnk and sz share the doc partitioning). The unfiltered
-    # doc-partitioned relation is persisted so the prefix branch and
-    # the verify-arrays branch both read it without recompute.
-    w_sh = Window.partitionBy("shingle")
-    w_doc = Window.partitionBy("doc")
-    tie = "shingle_str" if cap is not None else "shingle"
-    annotated = (
-        sh.withColumn("df_", F.count(F.lit(1)).over(w_sh))
-        .withColumn(
-            "rnk",
-            F.row_number().over(w_doc.orderBy("df_", tie)),
-        )
-        .withColumn("sz", F.count(F.lit(1)).over(w_doc))
+    if cap is not None and cap < 1:
+        raise ValueError(f"max_shingles_per_doc must be >= 1, got {cap}")
+    # with the cap on, the shingle string rides along ONLY to order
+    # rank ties portably; _rarest_first drops it before pinning, so the
+    # candidate join and verify arrays still move 8-byte longs
+    annotated = _rarest_first(
+        _hashed_shingles(
+            df, id_col, text_col, n, max_shingle_df,
+            doc_keyed=False, keep_str=cap is not None,
+        ),
+        cap,
     )
-    if cap is not None:
-        annotated = annotated.filter(F.col("rnk") <= cap).withColumn(
-            "sz", F.least(F.col("sz"), F.lit(cap))
-        )
-    annotated = pin(annotated.select("doc", "shingle", "rnk", "sz"))
-    ranked = annotated.filter(
-        # prefix length: sz - ceil(t*sz) + 1
-        F.col("rnk") <= F.col("sz") - F.ceil(F.lit(t) * F.col("sz") - eps) + 1
-    ).select("doc", "shingle", "rnk", "sz")
+    ranked = annotated.filter(F.col("rnk") <= _prefix_len(t))
 
     a = ranked.select(
         F.col("doc").alias("doc_a"), "shingle",
@@ -490,7 +475,7 @@ def ngram_jaccard_pairs_prefix(
     )
     # Required overlap for jaccard ≥ t: inter ≥ t/(1+t) · (|A|+|B|).
     alpha = F.ceil(
-        F.lit(t / (1.0 + t)) * (F.col("sz_a") + F.col("sz_b")) - eps
+        F.lit(t / (1.0 + t)) * (F.col("sz_a") + F.col("sz_b")) - _EPS
     )
     # Common-prefix COUNT lower bound (r12, lossless): sort the I
     # common tokens of a true pair by the global rarity order; the
@@ -516,8 +501,8 @@ def ngram_jaccard_pairs_prefix(
     cnt_min = (
         alpha
         - F.greatest(
-            F.ceil(F.lit(t) * F.col("sz_a") + eps),
-            F.ceil(F.lit(t) * F.col("sz_b") + eps),
+            F.ceil(F.lit(t) * F.col("sz_a") + _EPS),
+            F.ceil(F.lit(t) * F.col("sz_b") + _EPS),
         )
         + 1
     )
@@ -525,8 +510,8 @@ def ngram_jaccard_pairs_prefix(
         a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
         # length filter: |B| ≥ t·|A| and |A| ≥ t·|B|
-        .filter(F.col("sz_b") >= F.lit(t) * F.col("sz_a") - eps)
-        .filter(F.col("sz_a") >= F.lit(t) * F.col("sz_b") - eps)
+        .filter(F.col("sz_b") >= F.lit(t) * F.col("sz_a") - _EPS)
+        .filter(F.col("sz_a") >= F.lit(t) * F.col("sz_b") - _EPS)
         .groupBy("doc_a", "doc_b")
         .agg(
             F.count(F.lit(1)).alias("cnt_pp"),
@@ -548,31 +533,10 @@ def ngram_jaccard_pairs_prefix(
         .filter(F.col("cnt_pp") >= cnt_min)
         .select("doc_a", "doc_b")
     )
-
-    # Verify on per-doc shingle arrays instead of re-joining the full
-    # shingle table twice: the arrays relation is one row per doc, so
-    # AQE broadcasts it at test scale and it stays an equi-join (never
-    # all-pairs) at corpus scale. array_intersect over distinct
-    # elements gives the exact intersection count.
-    arrs = annotated.groupBy("doc").agg(F.collect_list("shingle").alias("arr"))
-    aa = arrs.select(F.col("doc").alias("doc_a"), F.col("arr").alias("arr_a"))
-    ab = arrs.select(F.col("doc").alias("doc_b"), F.col("arr").alias("arr_b"))
     return (
-        cand.join(aa, "doc_a")
-        .join(ab, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("arr_a", "arr_b")).alias("inter"),
-            F.size("arr_a").alias("sz_a"),
-            F.size("arr_b").alias("sz_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
+        _array_verify(cand, annotated)
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
     )
 
 
@@ -868,114 +832,36 @@ def near_dup_pairs(
     n: int = 3,
 ) -> DataFrame:
     """The production near-dup pipeline: LSH banding generates
-    candidates (linear), exact Jaccard verifies ONLY those candidates.
+    candidates (linear), exact Jaccard verifies ONLY those candidates
+    on per-doc shingle arrays (:func:`_array_verify`, the verify the
+    prefix generators share).
 
     With r = n_hashes/bands = 2 rows per band, candidate recall at
     j=0.5 is 1-(1-0.25)^16 ≈ 0.99 and ≈1.0 for j≥0.7 — the verify
     step then removes all false positives, so the output equals the
     exact all-pairs sweep wherever recall holds, at a fraction of the
-    join cost.
+    join cost. Output: (doc_a, doc_b, jaccard), doc_a < doc_b.
     """
     # ONE pinned raw shingle table feeds both the minhash signatures
-    # (candidate leg) and the exact-Jaccard verify leg — the
-    # posexplode+window+distinct scan is the pipeline's most
-    # expensive stage and used to run twice (r13)
+    # (candidate leg, which hashes the shingle STRING portably) and
+    # the verify leg
     sh_raw = pin(shingle_table(df, id_col, text_col, n))
     cand = pin(
         minhash_candidates(
             df, id_col, text_col, n_hashes, bands, n, shingles=sh_raw
         )
     )
-    # hashed join key: same rationale/caveat as ngram_jaccard_pairs
+    # hashed shingles: same rationale/caveat as _hashed_shingles
     sh = sh_raw.select("doc", F.xxhash64("shingle").alias("shingle"))
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
-
-    a = sh.select(F.col("doc").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc").alias("doc_b"), "shingle")
-    # Join-strategy gate on the EXACT candidate count (r13, refining
-    # the r12 fix): cand sits behind the minhash band self-join, and
-    # Catalyst's STATIC size estimate for it derives from the
-    # pre-explode scan — at 100× it put the ~2e7-pair relation under
-    # the broadcast threshold and died building the broadcast table
-    # (notEnoughMemoryToBuildAndBroadcastTable). cand is pinned, so
-    # this scalar count() both materializes the cache and gives the
-    # true pair count, and the branch is chosen on real data, never
-    # an estimate.
-    n_cand = cand.count()
-    if n_cand <= _CAND_BROADCAST_MAX:
-        # small-cand path: broadcast-semi-filter BOTH shingle sides
-        # down to candidate docs before the (doc_b, shingle) join, so
-        # the verify leg never shuffles the full shingle table — the
-        # only shuffled relations are candidate-doc-sized (bounded by
-        # n_cand × doc size, and n_cand ≤ 2M here by the gate)
-        a_f = a.join(
-            F.broadcast(cand.select("doc_a").distinct()), "doc_a", "semi"
-        )
-        b_f = b.join(
-            F.broadcast(cand.select("doc_b").distinct()), "doc_b", "semi"
-        )
-        inter = (
-            F.broadcast(cand).join(a_f, "doc_a")
-            .join(b_f, ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        sa = sizes.select(
-            F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a")
-        )
-        sb = sizes.select(
-            F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b")
-        )
-        # the sizes joins carry NO hint (r13 refinement of the r12
-        # fix): sizes is |docs|-bounded and sits behind a shuffle
-        # (groupBy), so AQE sizes it from ACTUAL runtime shuffle
-        # stats — the static misestimate that broadcast-OOMed the
-        # cand relation at 100× cannot recur here, and letting AQE
-        # broadcast a genuinely small sizes table saves two
-        # pair-sized shuffles of `inter`.
-        scored = inter.join(sa, "doc_a").join(sb, "doc_b")
-    else:
-        # Web-scale path (r13, second revision): verify on per-doc
-        # shingle ARRAYS — the same pair-bounded shape the proven
-        # ngram_jaccard_pairs_prefix verify runs at 27M pairs at the
-        # ×100 corpus. The first revision's exploded
-        # (cand ⋈ a) ⋈ (doc_b, shingle) join moved a pair×shingle-
-        # sized intermediate (Σ_pairs |A| rows ≈ 5e9 at ×100) through
-        # TWO shuffles and filled the 100×-sweep host's disk
-        # (SWEEP_r13.md §3); the array join shuffles Σ_pairs(|A|+|B|)
-        # bytes once per side, needs no post-join aggregate, and the
-        # sizes come free as array lengths. Both shingle sides are
-        # semi-filtered to candidate docs first (no-op on a dense
-        # near-dup corpus, a large prune on a real one). shuffle_hash
-        # hints keep the big array relations streaming — the pair
-        # side builds the per-partition hash table, and nothing
-        # sorts Σ_pairs(|A|+|B|) bytes the way SMJ would.
-        cdocs_a = cand.select("doc_a").distinct()
-        cdocs_b = cand.select("doc_b").distinct()
-        arrs = sh.groupBy("doc").agg(F.collect_list("shingle").alias("arr"))
-        aa = arrs.join(
-            cdocs_a, arrs["doc"] == cdocs_a["doc_a"], "semi"
-        ).select(F.col("doc").alias("doc_a"), F.col("arr").alias("arr_a"))
-        ab = arrs.join(
-            cdocs_b, arrs["doc"] == cdocs_b["doc_b"], "semi"
-        ).select(F.col("doc").alias("doc_b"), F.col("arr").alias("arr_b"))
-        scored = (
-            cand.hint("shuffle_hash")
-            .join(aa, "doc_a")
-            .join(ab.hint("shuffle_hash"), "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.size(F.array_intersect("arr_a", "arr_b")).alias("inter"),
-                F.size("arr_a").alias("sz_a"),
-                F.size("arr_b").alias("sz_b"),
-            )
-        )
+    # cand sits behind the minhash band self-join, and Catalyst's
+    # STATIC size estimate for it derives from the pre-explode scan —
+    # at 100× it put the ~2e7-pair relation under the broadcast
+    # threshold and died building the broadcast table. The hint makes
+    # it the per-partition hash-build side of a shuffled join instead;
+    # the arrays side is sized by AQE from runtime shuffle stats.
     return (
-        scored.withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
+        _array_verify(cand.hint("shuffle_hash"), sh)
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )

@@ -102,10 +102,6 @@ def _bundle_group(bundle: Column, idx: int) -> Column:
     return F.try_element_at(F.split(F.substring(bundle, 2, 1 << 30), _SEP), F.lit(idx))
 
 
-def _ext(desc: Column, pat: str, idx: int) -> Column:
-    return F.regexp_extract(desc, pat, idx)
-
-
 def desc_extract(
     df: DataFrame,
     desc_col: str = "Description",

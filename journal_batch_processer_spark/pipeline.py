@@ -63,7 +63,6 @@ def split_stage(
     contract: Contract = DEFAULT_CONTRACT,
     strict_reference_mode: bool = False,
     exact_year_impute: bool = True,
-    sort_output: bool = True,
 ) -> DataFrame:
     """Defaults → regex extraction → natural sort → barcode flags →
     year imputation → month normalization (BatchUpdate.py:189-423)."""
@@ -91,9 +90,9 @@ def split_stage(
             "Chron J", month_normalize(F.col("Chron J"), strict_reference_mode)
         )
 
-    if sort_output and has_desc:
+    if has_desc:
         df = df.orderBy("MMS ID", PRE_VOL_COL, VOL_COL, "Description")
-    elif sort_output:
+    else:
         df = df.orderBy("MMS ID")
 
     if has_desc:

@@ -24,6 +24,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import env_int
+
 
 def _stream_dir(sf_dir: str, table: str, prefix: str) -> str:
     """File-source streams list a DIRECTORY; expose the single parquet
@@ -108,9 +110,9 @@ _PY_STATE_TASK_BYTES = 128 * 1024
 def _stateful_shuffle_partitions(
     spark: SparkSession, src_path: str, python_stateful: bool
 ) -> int:
-    override = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS")
+    override = env_int("SPARK_GRAFT_STREAM_STATE_PARTS")
     if override:
-        return int(override)
+        return override
     try:
         size = os.path.getsize(src_path)
     except OSError:
@@ -130,7 +132,7 @@ def _await_drain(q, name: str, timeout: int | None = None) -> None:
     minutes — SPARK_GRAFT_STREAM_DRAIN_TIMEOUT overrides (sweeps set
     it; the fail-loud semantics are unchanged, only the bound)."""
     if timeout is None:
-        timeout = int(os.environ.get("SPARK_GRAFT_STREAM_DRAIN_TIMEOUT", "180"))
+        timeout = env_int("SPARK_GRAFT_STREAM_DRAIN_TIMEOUT", 180)
     q.awaitTermination(timeout=timeout)
     if q.isActive:  # pragma: no cover - defensive against a hung drain
         q.stop()

@@ -24,6 +24,23 @@ def force_distributed() -> bool:
     return os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED", "") == "1"
 
 
+def env_int(name: str, default: int | None = None) -> int | None:
+    """Integer value of env var ``name``, or ``default`` when it is
+    unset or empty. Fails early — naming the variable and its value —
+    on anything but an integer >= 1, instead of a bad Spark conf or a
+    zero-second timeout surfacing much later."""
+    raw = os.environ.get(name, "")
+    if not raw:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0  # reported below like any other value < 1
+    if value < 1:
+        raise ValueError(f"{name} must be an integer >= 1, got {raw!r}")
+    return value
+
+
 def get_spark(
     app_name: str = "journal-batch-processer-spark",
     master: str | None = None,
@@ -35,11 +52,11 @@ def get_spark(
     Defaults are driven by env vars the bench/test driver sets:
     ``SPARK_GRAFT_CPUS`` (local parallelism) — falls back to local[*].
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    cpus = env_int("SPARK_GRAFT_CPUS")
     if master is None:
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus else 32
+        shuffle_partitions = cpus or 32
 
     # Python workers must be able to import this package (pandas-UDF
     # closures reference it) regardless of the driver's cwd.
@@ -101,35 +118,6 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = None):
-    """Read the driver parquet tables under ``sf_dir`` and register temp views.
-
-    Returns a dict name -> DataFrame. Column pruning / predicate pushdown
-    are Catalyst's job — we never pre-filter here.
-    """
-    names = tables or [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for name in names:
-        if name == "events":
-            df = load_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def normalize_events_ts(df):

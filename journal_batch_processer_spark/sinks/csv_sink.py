@@ -9,6 +9,10 @@ that, with ``strict_reference_mode`` keeping the buggy behavior).
 Spark writes a directory of part files; ``single_file=True`` coalesces
 to one partition for small-batch parity with the reference. At 100 TB
 you never coalesce — the default path writes partitioned output.
+
+The CSV datasource has no struct, array or map type, so such columns
+(the update stage's merged ``item`` record) are written as their
+``to_json`` text.
 """
 
 from __future__ import annotations
@@ -16,6 +20,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 STAGE_MESSAGES = {
     "f_": "Formatted data written to ",
@@ -45,6 +51,12 @@ def write_stage_csv(
     """Write the stage output, returning the output path."""
     name = stage_output_name(prefix, input_name, strict_reference_mode)
     path = os.path.join(out_dir, name)
+    nested = [
+        f.name for f in df.schema.fields
+        if isinstance(f.dataType, (StructType, ArrayType, MapType))
+    ]
+    if nested:
+        df = df.withColumns({c: F.to_json(F.col(f"`{c}`")) for c in nested})
     writer = df.coalesce(1) if single_file else df
     (
         writer.write.mode("overwrite")

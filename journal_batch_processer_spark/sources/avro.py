@@ -382,10 +382,6 @@ def _avro_paths(path: str) -> list[str]:
     return [path]
 
 
-def spark_type_of_ddl(ddl_field: str) -> str:
-    return ddl_field.rsplit(" ", 1)[1]
-
-
 def make_avro_source():
     """Build the DataSource class lazily (pyspark import at call time)."""
     from pyspark.sql.datasource import (

@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import env_int
+
 
 # Session-scoped schema memo (r14 — the table_format._path_relation
 # precedent, guide §6): the stream reader probes the source schema via
@@ -228,6 +230,10 @@ def run_available_now(
 ) -> list:
     """Drain the stream with availableNow into an in-memory sink and
     return the collected rows (test/bench harness)."""
+    # bounded wait: stateful queries with processing-time timeouts can
+    # otherwise idle past the drained input; the bound is env-tunable
+    # because a 100× availableNow drain legitimately needs minutes
+    timeout = env_int("SPARK_GRAFT_STREAM_DRAIN_TIMEOUT", 180)
     q = (
         stream_df.writeStream.format("memory")
         .queryName(query_name)
@@ -235,10 +241,6 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    # bounded wait: stateful queries with processing-time timeouts can
-    # otherwise idle past the drained input; the bound is env-tunable
-    # because a 100× availableNow drain legitimately needs minutes
-    timeout = int(os.environ.get("SPARK_GRAFT_STREAM_DRAIN_TIMEOUT", "180"))
     q.awaitTermination(timeout=timeout)
     if q.isActive:
         q.stop()

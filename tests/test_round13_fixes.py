@@ -1,13 +1,10 @@
-"""Regression tests for the r13 dedup_near web-scale verify rewrite.
+"""Regression tests for the r13 fixes.
 
-The 100× sweep's first direct dedup_near run died on disk: the
-web-scale verify branch joined the candidate pairs through the
-exploded (doc, shingle) table twice, shuffling a pair×shingle-sized
-intermediate (~5e9 rows at the ×100 corpus). The branch now verifies
-on per-doc shingle arrays (array_intersect) — the shape
-ngram_jaccard_pairs_prefix already proved at 27M pairs — so the
-shuffle volume is Σ_pairs(|A|+|B|) bytes, once per side. These tests
-pin that the two branches stay output-identical.
+near_dup_pairs verifies its LSH candidates on per-doc shingle arrays
+(array_intersect) — the verify the prefix generators share, proven at
+27M pairs at the ×100 corpus — on every input, with no count-gated
+second branch. The exploded self-join of ngram_jaccard_pairs is the
+exact reference it must reproduce wherever LSH recall holds.
 """
 
 from __future__ import annotations
@@ -35,21 +32,18 @@ def docs(spark):
     )
 
 
-def test_web_scale_verify_matches_broadcast_path(spark, docs, monkeypatch):
-    small = dedup.near_dup_pairs(docs, "doc_id", "text", threshold=0.5)
-    got_small = _pairs(small)
-
-    # force the >_CAND_BROADCAST_MAX branch on the same input
-    monkeypatch.setattr(dedup, "_CAND_BROADCAST_MAX", 0)
-    web = dedup.near_dup_pairs(docs, "doc_id", "text", threshold=0.5)
-    got_web = _pairs(web)
-
-    assert got_small, "fixture produced no near-dup pairs; test is vacuous"
-    assert got_web == got_small
+def test_web_scale_verify_matches_broadcast_path(spark, docs):
+    # the array verify is the only path; the exploded self-join of
+    # ngram_jaccard_pairs is the exact reference it must reproduce
+    got = _pairs(dedup.near_dup_pairs(docs, "doc_id", "text", threshold=0.5))
+    exact = _pairs(
+        dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5)
+    )
+    assert got, "fixture produced no near-dup pairs; test is vacuous"
+    assert got == exact
 
 
-def test_web_scale_verify_schema_and_threshold(spark, docs, monkeypatch):
-    monkeypatch.setattr(dedup, "_CAND_BROADCAST_MAX", 0)
+def test_web_scale_verify_schema_and_threshold(spark, docs):
     out = dedup.near_dup_pairs(docs, "doc_id", "text", threshold=0.5)
     assert [f.name for f in out.schema.fields] == ["doc_a", "doc_b", "jaccard"]
     rows = out.collect()
