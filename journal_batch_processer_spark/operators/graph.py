@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import small_input
+
 
 def symmetrize(pairs: DataFrame, a: str, b: str) -> DataFrame:
     """Undirected edge list from (a, b) pairs."""
@@ -213,19 +215,13 @@ def _union_find_labels(edges: DataFrame) -> DataFrame:
     )
     rows = [(node, comp_min[find(node)]) for node in parent]
     # Broadcast hint: this path only runs for edge sets at or below
-    # small_graph_edges (≤ ~200k label rows, a few MB), and the label
+    # SMALL_GRAPH_EDGES (≤ ~200k label rows, a few MB), and the label
     # table's provenance (Python createDataFrame → UnknownPartitioning,
     # no stats) otherwise forces the caller's docs ⋈ labels join into a
     # SortMergeJoin that shuffles BOTH sides — including the full corpus
     # side (guide §3.1: hint when you know a side is small and the
     # planner cannot). The distributed star path returns un-hinted.
     return F.broadcast(edges.sparkSession.createDataFrame(rows, schema))
-
-
-# Node-count companion bound for the driver-side small-graph paths:
-# collecting the node list must stay a few MB even when the edge list
-# is sparse (isolated nodes appear in nodes, not edges).
-SMALL_GRAPH_NODES = 200_000
 
 
 def hindex_coreness_small(
@@ -295,11 +291,7 @@ def lpa_labels_small(edge_rows: list, node_ids: list, iters: int) -> dict:
     return lbl
 
 
-def connected_components_star(
-    edges: DataFrame,
-    max_iter: int = 50,
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
-) -> DataFrame:
+def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Large-star/small-star connected components over a (src, dst)
     edge list (symmetry not required). Returns (n, component) for
     every node appearing in an edge, component = min reachable id —
@@ -308,7 +300,7 @@ def connected_components_star(
     the 100 TB default.
 
     Adaptive small-graph path: the edge count is known for free after
-    the checkpoint; at or below ``small_graph_edges`` the closure runs
+    the checkpoint; at or below SMALL_GRAPH_EDGES the closure runs
     as a driver union-find instead of distributed rounds. Candidate
     pairs AFTER bucketed near-dup filtering are often tiny even when
     the corpus is 100 TB — the filtering did the scale work; pay
@@ -318,10 +310,8 @@ def connected_components_star(
     Reference capability: BatchUpdate.py has no graph op — this backs
     the dedup_cluster EXT query (pairs → transitive closure).
     """
-    from journal_batch_processer_spark.session import force_distributed
-
     edges = edges.localCheckpoint(eager=True)
-    if edges.count() <= small_graph_edges and not force_distributed():
+    if small_input(edges.count(), SMALL_GRAPH_EDGES):
         return _union_find_labels(edges)
     star, _ = _star_rounds(edges, max_iter)
     # At fixpoint every edge points node → its component's minimum id,
@@ -347,9 +337,8 @@ def cluster_assignments(
     """Every row of ``df`` → (id, cluster_id, is_rep): transitive
     closure over ``pairs`` with singletons as their own cluster and
     the minimum id as the deterministic representative."""
-    # materialize pairs ONCE: symmetrize unions two selects over the
-    # same (expensive — shingle-join) plan, which would execute twice
-    pairs = pairs.localCheckpoint(eager=True)
+    # connected_components_star checkpoints its edge input eagerly, so
+    # the (expensive — shingle-join) pair generator runs once
     cc = connected_components_star(
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
     )
@@ -364,14 +353,24 @@ def cluster_assignments(
     )
 
 
-def triangle_counts_small(edge_rows: list) -> dict:
+# Wedge-work bound for the driver-side triangle path: sum over sources
+# of C(out-degree, 2), computed from the COLLECTED edges before any
+# Python counting — a pure function of the data, never a core-count
+# constant. Above it the distributed joins run (the checkpointed edge
+# list is reused, only the collect was extra).
+TRIANGLE_DRIVER_MAX_WEDGES = 2_000_000
+
+
+def triangle_counts_small(edge_rows: list) -> dict | None:
     """Driver-side degree-oriented wedge counting for SMALL edge lists
     — exactly the distributed plan's arithmetic (same packed
     (deg·1e12 + id) orientation key, same strict dstk wedge order,
     same closing-edge multiplicity semantics for parallel edges), so
     the result is bit-identical to the in-plan joins (pinned in
     tests/test_round14_fixes.py). Returns {node: n_triangles} for
-    nodes in at least one triangle."""
+    nodes in at least one triangle, or None when the oriented wedge
+    count exceeds TRIANGLE_DRIVER_MAX_WEDGES (the caller then runs the
+    distributed joins)."""
     from collections import Counter, defaultdict
 
     deg: dict = defaultdict(int)
@@ -385,6 +384,9 @@ def triangle_counts_small(edge_rows: list) -> dict:
         s, d = (x, y) if key[x] < key[y] else (y, x)
         out[s].append((key[d], d))
         ocnt[(s, d)] += 1
+    wedges = sum(len(lst) * (len(lst) - 1) // 2 for lst in out.values())
+    if wedges > TRIANGLE_DRIVER_MAX_WEDGES:
+        return None
     tri: dict = defaultdict(int)
     for u, lst in out.items():
         lst.sort()
@@ -400,14 +402,6 @@ def triangle_counts_small(edge_rows: list) -> dict:
                     tri[vi] += c
                     tri[vj] += c
     return dict(tri)
-
-
-# Wedge-work bound for the driver-side triangle path: sum over sources
-# of C(out-degree, 2), computed from the COLLECTED edges before any
-# Python counting — a pure function of the data, never a core-count
-# constant. Above it the distributed joins run (the checkpointed edge
-# list is reused, only the collect was extra).
-TRIANGLE_DRIVER_MAX_WEDGES = 2_000_000
 
 
 def triangle_counts(
@@ -452,29 +446,14 @@ def triangle_counts(
     # (degree agg + 2 orientation joins + pin + wedge self-join +
     # closing join) measured 1.6 s of pure per-stage fixed cost over a
     # 256-edge fixture. At or below SMALL_GRAPH_EDGES (count is a
-    # cached scan over the eager checkpoint) collect the edges, bound
-    # the wedge work analytically from the collected degrees, and run
-    # the identical integer counting driver-side; above either bound —
-    # or under SPARK_GRAFT_FORCE_DISTRIBUTED=1 — the joins below run
-    # unchanged (the 100 TB path).
-    from journal_batch_processer_spark.session import force_distributed
-
-    if e0.count() <= SMALL_GRAPH_EDGES and not force_distributed():
-        edge_rows = [(r[0], r[1]) for r in e0.collect()]
-        from collections import Counter
-
-        odeg: Counter = Counter()
-        deg_c: Counter = Counter()
-        for x, y in edge_rows:
-            deg_c[x] += 1
-            deg_c[y] += 1
-        for x, y in edge_rows:
-            kx = deg_c[x] * 1_000_000_000_000 + x
-            ky = deg_c[y] * 1_000_000_000_000 + y
-            odeg[x if kx < ky else y] += 1
-        wedges = sum(d * (d - 1) // 2 for d in odeg.values())
-        if wedges <= TRIANGLE_DRIVER_MAX_WEDGES:
-            tri = triangle_counts_small(edge_rows)
+    # cached scan over the eager checkpoint) collect the edges and run
+    # the identical integer counting driver-side, which gives up (None)
+    # above TRIANGLE_DRIVER_MAX_WEDGES; above either bound — or under
+    # SPARK_GRAFT_FORCE_DISTRIBUTED=1 — the joins below run unchanged
+    # (the 100 TB path).
+    if small_input(e0.count(), SMALL_GRAPH_EDGES):
+        tri = triangle_counts_small([(r[0], r[1]) for r in e0.collect()])
+        if tri is not None:
             t = pairs.schema[a].dataType
             from pyspark.sql.types import LongType, StructField, StructType
 

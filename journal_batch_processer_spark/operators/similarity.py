@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import small_input
+
 # Process-level memo for deterministic training (centroids/codebooks):
 # training is a pure function of (file identity, hyperparameters), but
 # it re-ran on EVERY query construction — each ANN key trains once for
@@ -1135,17 +1137,10 @@ def pq_topk(
     # vectors, then normalize only the survivors — never a full-corpus
     # Python pass. Per-row normalize commutes with the id-equi join,
     # so both are bit-identical; the 10-row query side keeps _unit.
-    from journal_batch_processer_spark.session import force_distributed
-
     cu_raw = corpus.select(
         F.col(id_col).alias("neighbor_id"), vec_c.alias("__raw")
     )
-    small = (
-        n_rows is not None
-        and n_rows <= PQ_FULL_NORM_MAX_ROWS
-        and not force_distributed()
-    )
-    if small:
+    if small_input(n_rows, PQ_FULL_NORM_MAX_ROWS):
         cu = cu_raw.select(
             "neighbor_id", unit_vec_arrow(F.col("__raw"), dim).alias("cu")
         )
@@ -1302,17 +1297,10 @@ def ivfpq_topk(
     # full-normalize branch, large ones broadcast the bounded shortlist
     # into a point-lookup join over the raw vectors and normalize only
     # the survivors; per-row normalize commutes with the id-equi join.
-    from journal_batch_processer_spark.session import force_distributed
-
     cu_raw = corpus.select(
         F.col(id_col).alias("neighbor_id"), vec_c.alias("__raw")
     )
-    small = (
-        n_rows is not None
-        and n_rows <= PQ_FULL_NORM_MAX_ROWS
-        and not force_distributed()
-    )
-    if small:
+    if small_input(n_rows, PQ_FULL_NORM_MAX_ROWS):
         fetched = short.join(_unit(cu_raw, "cu"), "neighbor_id")
     else:
         fetched = _unit(cu_raw.join(F.broadcast(short), "neighbor_id"), "cu")
@@ -1499,10 +1487,7 @@ def kmeans_integer_distributed(
     # skip the job; the counted-data gate semantics are unchanged.
     if n_rows is None:
         n_rows = q.count()  # q is an eager localCheckpoint — cached scan
-    from journal_batch_processer_spark.session import force_distributed
-
-    if force_distributed():  # tripwire: always take the scale branch
-        n_rows = KMI_EXPR_MAX_ROWS + 1
+    use_expr = small_input(n_rows, KMI_EXPR_MAX_ROWS)
 
     def assign(cent_rows: list[list[int]]) -> DataFrame:
         # Assignment is a NARROW per-row argmin against the k driver-
@@ -1516,10 +1501,10 @@ def kmeans_integer_distributed(
         # measured crossover the prunable expression keeps count-only
         # consumers (the r01 bench methodology) free; above it the
         # interpretation cost dominates any consumer.
-        if n_rows > KMI_EXPR_MAX_ROWS:
-            best = kmi_assign_arrow(cent_rows)(F.col("qv"))
-        else:
+        if use_expr:
             best = F.expr(kmi_assign_expr(cent_rows))
+        else:
+            best = kmi_assign_arrow(cent_rows)(F.col("qv"))
         scored = q.select("vec_id", "qv", best.alias("__best"))
         return scored.select(
             "vec_id",
@@ -1541,17 +1526,7 @@ def kmeans_integer_distributed(
         # derived corpora: 0.93 s vs 6.6 s at 100 k rows; below the
         # crossover (tiny per-task batches) the JVM expression path
         # avoids the Python round-trips and stays as-measured.
-        if n_rows > KMI_EXPR_MAX_ROWS:
-            partials = q.select("qv").mapInPandas(
-                kmi_round_partials_arrow(cents),
-                "cluster int, d int, s bigint, n bigint",
-            )
-            sums = (
-                partials.groupBy("cluster", "d")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-        else:
+        if use_expr:
             a = q.select(
                 "qv", F.expr(kmi_assign_expr(cents)).alias("__best")
             ).select("qv", F.col("__best.cluster").alias("cluster"))
@@ -1559,6 +1534,16 @@ def kmeans_integer_distributed(
                 a.select("cluster", F.posexplode("qv").alias("d", "v"))
                 .groupBy("cluster", "d")
                 .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
+        else:
+            partials = q.select("qv").mapInPandas(
+                kmi_round_partials_arrow(cents),
+                "cluster int, d int, s bigint, n bigint",
+            )
+            sums = (
+                partials.groupBy("cluster", "d")
+                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
                 .collect()
             )
         by_cluster: dict[int, dict[int, tuple[int, int]]] = {}

@@ -57,6 +57,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..metadata import file_fingerprint, memo_get
+
 _STATS_TYPES = (int, float, str)
 
 # --- session-scoped relation memo (r14, guide §6) --------------------------
@@ -71,29 +73,25 @@ _STATS_TYPES = (int, float, str)
 # of its 2.0 s building DataFrames before any job ran. This memo is the
 # FileStatusCache analog for manifest reads: METADATA ONLY (a lazy
 # DataFrame plan — no rows, no results; every action still scans the
-# parquet), keyed by application, schema, and the exact (path, mtime,
-# size) set so any rewritten file misses. In-process and bounded; dies
-# with the session.
+# parquet), keyed by session, schema, and the exact (path, mtime_ns,
+# size) set so any rewritten file misses. The session key is its
+# identity: a cached DataFrame holds its session, so the id cannot be
+# reused while the entry lives, and a newSession() clone (own conf,
+# own temp views) never receives its parent's relation. In-process and
+# bounded (metadata.memo_get).
 _REL_CACHE: dict = {}
-_REL_CACHE_MAX = 256
 
 
 def _path_relation(spark: SparkSession, ddl: str, paths: list) -> DataFrame:
     try:
-        fkey = tuple(
-            (p, int(os.path.getmtime(p) * 1000), os.path.getsize(p))
-            for p in sorted(paths)
-        )
+        fkey = file_fingerprint(sorted(paths))
     except OSError:  # racing writer/cleaner: resolve uncached
         return spark.read.schema(ddl).parquet(*paths)
-    key = (spark.sparkContext.applicationId, ddl, fkey)
-    df = _REL_CACHE.get(key)
-    if df is None:
-        if len(_REL_CACHE) >= _REL_CACHE_MAX:
-            _REL_CACHE.clear()  # tiny plans; wholesale reset is fine
-        df = spark.read.schema(ddl).parquet(*paths)
-        _REL_CACHE[key] = df
-    return df
+    return memo_get(
+        _REL_CACHE,
+        (id(spark), ddl, fkey),
+        lambda: spark.read.schema(ddl).parquet(*paths),
+    )
 
 
 class CommitConflictError(RuntimeError):

@@ -379,11 +379,9 @@ def q_kmeans_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it cost ~0.2 s at sf0.1)
     import os as _os
 
-    import pyarrow.parquet as _pq
+    from journal_batch_processer_spark.metadata import parquet_row_count
 
-    n_rows = _pq.ParquetFile(
-        _os.path.join(sf_dir, "embeddings.parquet")
-    ).metadata.num_rows
+    n_rows = parquet_row_count(_os.path.join(sf_dir, "embeddings.parquet"))
     return kmeans_integer_distributed(
         embs, k=KMI_K, n_iters=KMI_ITERS, dim=EMB_DIM, n_rows=n_rows
     )

@@ -47,6 +47,7 @@ from journal_batch_processer_spark.operators.text_analysis import (
     repetition_stats,
     token_stats,
 )
+from journal_batch_processer_spark.metadata import parquet_row_count
 from journal_batch_processer_spark.session import load_events
 
 EMB_DIM = 64
@@ -3667,8 +3668,6 @@ def q_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_pq_codebooks,
     )
 
-    import pyarrow.parquet as _pq
-
     embs = _embs(spark, sf_dir)
     queries = embs.filter(F.col("vec_id") < 10)
     pq_path = _os.path.join(sf_dir, "embeddings.parquet")
@@ -3677,7 +3676,7 @@ def q_sim_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # refine-fetch shape — see similarity.PQ_FULL_NORM_MAX_ROWS
     return pq_topk(
         embs, queries, books, dim=EMB_DIM, k=5, refine=50,
-        n_rows=_pq.ParquetFile(pq_path).metadata.num_rows,
+        n_rows=parquet_row_count(pq_path),
     )
 
 
@@ -3827,11 +3826,9 @@ def q_sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_path = _os.path.join(sf_dir, "embeddings.parquet")
     cents = train_ivf_centroids(pq_path, n_centroids=16)
     books = train_pq_codebooks(pq_path, m=16, ksub=16)
-    import pyarrow.parquet as _pqt
-
     return ivfpq_topk(
         embs, queries, cents, books, dim=EMB_DIM, k=5, n_probe=4, refine=50,
-        n_rows=_pqt.ParquetFile(pq_path).metadata.num_rows,
+        n_rows=parquet_row_count(pq_path),
     ).select(
         "query_id",
         F.col("rank").cast("int").alias("rank"),

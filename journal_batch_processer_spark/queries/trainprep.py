@@ -24,8 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from journal_batch_processer_spark.operators.graph import (
+    SMALL_GRAPH_EDGES,
+    hindex_coreness_small,
+    lpa_labels_small,
+)
 from journal_batch_processer_spark.queries.llmops import _docs, _embs
-from journal_batch_processer_spark.session import load_events
+from journal_batch_processer_spark.session import load_events, small_input
 
 # ---------------------------------------------------------------------------
 # chunking & packing
@@ -532,16 +537,13 @@ def _blocked_links(
 
 
 def _blocked_links_small(
-    node_ids: list,
-    n: int,
-    gens: tuple[tuple[int, int, int], ...],
-    symmetric: bool = False,
+    node_ids: list, n: int, gens: tuple[tuple[int, int, int], ...]
 ) -> set:
-    """Python replication of :func:`_blocked_links` + ``distinct`` for
-    the small-graph driver paths — identical integer arithmetic (same
-    block base / wrapped block size / lim gate / self-loop drop), so
-    the returned edge SET equals the distributed build row for row
-    (pinned by tests/test_round13_fixes2.py)."""
+    """Python replication of :func:`_blocked_links` (symmetric) +
+    ``distinct`` for the small-graph driver paths — identical integer
+    arithmetic (same block base / wrapped block size / lim gate /
+    self-loop drop), so the returned edge SET equals the distributed
+    build row for row (pinned by tests/test_round13_fixes2.py)."""
     out: set = set()
     for v in node_ids:
         base = v - v % LPA_BLOCK
@@ -552,9 +554,31 @@ def _blocked_links_small(
                 dst = base + (v * a + c) % bs
                 if dst != v:
                     out.add((v, dst))
-                    if symmetric:
-                        out.add((dst, v))
+                    out.add((dst, v))
     return out
+
+
+def _small_graph_rounds(
+    docs: DataFrame, n: int, gens: tuple, rounds, iters: int, col: str
+) -> DataFrame | None:
+    """(node_id, ``col``) from the integer ``rounds`` run on the driver
+    (the _union_find_labels precedent, r13 §2.4), or None above the
+    gate — the caller then runs its distributed rounds, ~18 tiny
+    stages of pure scheduling latency on a few-MB graph. Every node
+    emits at most 2·|gens| edges, so n alone bounds the edge count
+    ANALYTICALLY: no distributed build is needed to decide, and below
+    the gate the identical edge set is generated in Python
+    (_blocked_links_small)."""
+    if not small_input(2 * len(gens) * n, SMALL_GRAPH_EDGES):
+        return None
+    import pandas as pd
+
+    node_ids = [r[0] for r in docs.select("doc_id").collect()]
+    val = rounds(_blocked_links_small(node_ids, n, gens), node_ids, iters)
+    return docs.sparkSession.createDataFrame(
+        pd.DataFrame({"node_id": node_ids, col: [val[v] for v in node_ids]}),
+        f"node_id long, {col} long",
+    )
 
 
 def q_graph_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,33 +608,12 @@ def q_graph_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Undirected neighborhood: symmetrize + dedup parallel edges —
     # both directions emitted in one explode pass (see _blocked_links).
     gens = tuple((a, c, LPA_BLOCK) for a, c in ((3, 1), (7, 11), (1, 1)))
-    # Adaptive small-graph path — same analytic-edge-bound gate as
-    # q_graph_kcore (see the comment there); the driver rounds are
-    # bit-identical integer vote counting.
-    from journal_batch_processer_spark.operators.graph import (
-        SMALL_GRAPH_EDGES,
-        SMALL_GRAPH_NODES,
-        lpa_labels_small,
+    # small graphs: driver-side integer vote counting
+    small = _small_graph_rounds(
+        docs, n, gens, lpa_labels_small, LPA_ITERS, "community"
     )
-
-    from journal_batch_processer_spark.session import force_distributed
-
-    if (
-        n <= SMALL_GRAPH_NODES
-        and 2 * len(gens) * n <= SMALL_GRAPH_EDGES
-        and not force_distributed()
-    ):
-        import pandas as pd
-
-        node_ids = [r[0] for r in docs.select("doc_id").collect()]
-        edge_rows = _blocked_links_small(node_ids, n, gens, symmetric=True)
-        lbl = lpa_labels_small(edge_rows, node_ids, LPA_ITERS)
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {"node_id": node_ids, "community": [lbl[v] for v in node_ids]}
-            ),
-            "node_id long, community long",
-        )
+    if small is not None:
+        return small
     nodes = docs.select(F.col("doc_id").alias("node")).localCheckpoint()
     edges = (
         _blocked_links(nodes, n, gens, symmetric=True)
@@ -819,44 +822,15 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     CORE-PERIPHERY blocks (KCORE_GENS): hub nodes near each block
     start, degree-1 and isolated nodes at the tail, so the fixture
     corenesses span 0..5 and the peel has real work per round."""
-    from journal_batch_processer_spark.operators.graph import (
-        SMALL_GRAPH_EDGES,
-        SMALL_GRAPH_NODES,
-        hindex_coreness_small,
-    )
-
     docs = _docs(spark, sf_dir)
     n = docs.count()  # scalar action: graph size, needed as a literal
-    # Adaptive small-graph path (the connected_components_star /
-    # _union_find_labels precedent, r13 §2.4): 6 unrolled rounds ×
-    # (join + window/agg + join) are ~18 tiny stages of pure scheduling
-    # latency when the whole graph is a few MB. The graph is synthetic
-    # — every node emits at most 2·|gens| edges — so n alone bounds the
-    # edge count ANALYTICALLY and the gate needs no distributed build
-    # at all: below it, collect the doc_ids (one column), generate the
-    # identical edge set in Python (_blocked_links_small) and run the
-    # integer H-operator rounds on the driver. Above the gate the
-    # distributed rounds run unchanged (the 100 TB path).
-    from journal_batch_processer_spark.session import force_distributed
-
-    if (
-        n <= SMALL_GRAPH_NODES
-        and 2 * len(KCORE_GENS) * n <= SMALL_GRAPH_EDGES
-        and not force_distributed()
-    ):
-        import pandas as pd
-
-        node_ids = [r[0] for r in docs.select("doc_id").collect()]
-        edge_rows = _blocked_links_small(
-            node_ids, n, KCORE_GENS, symmetric=True
-        )
-        c = hindex_coreness_small(edge_rows, node_ids, KCORE_ITERS)
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {"node_id": node_ids, "coreness": [c[v] for v in node_ids]}
-            ),
-            "node_id long, coreness long",
-        )
+    # small graphs: driver-side integer H-operator rounds; above the
+    # gate the distributed rounds run unchanged (the 100 TB path)
+    small = _small_graph_rounds(
+        docs, n, KCORE_GENS, hindex_coreness_small, KCORE_ITERS, "coreness"
+    )
+    if small is not None:
+        return small
     nodes = docs.select(F.col("doc_id").alias("node")).localCheckpoint()
     # symmetrize + dedup parallel edges — both directions emitted in
     # one explode pass over nodes (see _blocked_links)

@@ -12,16 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
-def force_distributed() -> bool:
-    """True when SPARK_GRAFT_FORCE_DISTRIBUTED=1: every adaptive
-    small-input driver gate (tiny-graph kcore/labelprop rounds, the
-    union-find closure, the kmeans expression path) takes its
-    DISTRIBUTED branch regardless of counted input size. The gated
-    keys' bench rows otherwise never exercise the distributed shapes
-    at test SFs (VERDICT r13 #2) — tools/distributed_tripwire.py uses
-    this to keep a timed tripwire on them. Semantics are unchanged:
-    both branches are bit-equal (pinned in tests)."""
-    return os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED", "") == "1"
+def small_input(n: int | None, bound: int) -> bool:
+    """The one small-input gate of every adaptive driver/distributed
+    branch: True when the counted size ``n`` is known and <= ``bound``.
+    SPARK_GRAFT_FORCE_DISTRIBUTED=1 makes it False for any ``n``, so
+    every gate takes its DISTRIBUTED branch — the shapes test SFs never
+    reach (timed by tools/distributed_tripwire.py). Both branches of
+    every gate return the same rows (pinned in tests)."""
+    if os.environ.get("SPARK_GRAFT_FORCE_DISTRIBUTED", "") == "1":
+        return False
+    return n is not None and n <= bound
 
 
 def env_int(name: str, default: int | None = None) -> int | None:

@@ -24,37 +24,35 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..metadata import file_fingerprint, memo_get
 from ..session import env_int
 
 
 # Session-scoped schema memo (r14 — the table_format._path_relation
 # precedent, guide §6): the stream reader probes the source schema via
 # a batch footer read on EVERY call (~80-100 ms of relation resolution
-# per bench rep). Schema is METADATA, keyed by the resolved file's
-# (path, mtime, size) so a rewritten source misses; in-process only.
+# per bench rep). Schema is METADATA, keyed by the resolved files'
+# (path, mtime_ns, size) so a rewritten source misses; in-process and
+# bounded (metadata.memo_get).
 _SCHEMA_MEMO: dict = {}
 
 
 def _probe_events_schema(spark: SparkSession, events_dir: str):
     try:
-        files = sorted(
-            os.path.join(events_dir, f)
-            for f in os.listdir(events_dir)
-            if f.endswith(".parquet")
-        )
-        fkey = tuple(
-            (os.path.realpath(p), int(os.path.getmtime(p) * 1000),
-             os.path.getsize(p))
-            for p in files
+        fkey = file_fingerprint(
+            sorted(
+                os.path.realpath(os.path.join(events_dir, f))
+                for f in os.listdir(events_dir)
+                if f.endswith(".parquet")
+            )
         )
     except OSError:
         return spark.read.parquet(events_dir).schema
-    key = (spark.sparkContext.applicationId, fkey)
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = spark.read.parquet(events_dir).schema
-        _SCHEMA_MEMO[key] = schema
-    return schema
+    return memo_get(
+        _SCHEMA_MEMO,
+        (spark.sparkContext.applicationId, fkey),
+        lambda: spark.read.parquet(events_dir).schema,
+    )
 
 
 def read_events_stream(spark: SparkSession, events_dir: str) -> DataFrame:

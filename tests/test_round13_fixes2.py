@@ -306,9 +306,7 @@ def test_small_graph_driver_rounds_match_distributed(spark):
     k_edges = _blocked_links(nodes, n, KCORE_GENS, symmetric=True).distinct()
     k_rows = [(r[0], r[1]) for r in k_edges.collect()]
     # the Python edge generator equals the distributed build + distinct
-    assert _blocked_links_small(node_ids, n, KCORE_GENS, symmetric=True) == set(
-        k_rows
-    )
+    assert _blocked_links_small(node_ids, n, KCORE_GENS) == set(k_rows)
     got_k = hindex_coreness_small(k_rows, node_ids, KCORE_ITERS)
     want_k = distributed_kcore(k_edges)
     assert got_k == want_k
@@ -317,9 +315,7 @@ def test_small_graph_driver_rounds_match_distributed(spark):
     lpa_gens = tuple((a, c, LPA_BLOCK) for a, c in ((3, 1), (7, 11), (1, 1)))
     l_edges = _blocked_links(nodes, n, lpa_gens, symmetric=True).distinct()
     l_rows = [(r[0], r[1]) for r in l_edges.collect()]
-    assert _blocked_links_small(node_ids, n, lpa_gens, symmetric=True) == set(
-        l_rows
-    )
+    assert _blocked_links_small(node_ids, n, lpa_gens) == set(l_rows)
     got_l = lpa_labels_small(l_rows, node_ids, LPA_ITERS)
     want_l = distributed_lpa(l_edges)
     assert got_l == want_l

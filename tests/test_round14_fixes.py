@@ -50,7 +50,7 @@ def test_stateful_partitions_env_override(spark, tmp_path, monkeypatch):
     assert _stateful_shuffle_partitions(spark, str(f), True) == 7
 
 
-def test_force_distributed_env_flips_branch_same_rows(spark, monkeypatch):
+def test_env_forces_distributed_branch_same_rows(spark, monkeypatch):
     """SPARK_GRAFT_FORCE_DISTRIBUTED=1 must route the gated keys through
     the distributed branch (plan is no longer a driver-built local
     table) with an identical row set."""
@@ -75,7 +75,9 @@ def test_force_distributed_env_flips_branch_same_rows(spark, monkeypatch):
 def test_triangle_driver_gate_matches_distributed(spark, monkeypatch):
     """triangle_counts' driver-side small-graph path must be
     bit-identical to the distributed joins — including parallel edges
-    (closing-edge multiplicity) and degree ties."""
+    (closing-edge multiplicity) and degree ties — and past its wedge
+    bound the driver path gives up and the joins answer."""
+    from journal_batch_processer_spark.operators import graph
     from journal_batch_processer_spark.operators.graph import (
         triangle_counts,
     )
@@ -94,6 +96,14 @@ def test_triangle_driver_gate_matches_distributed(spark, monkeypatch):
     dist = sorted(tuple(r) for r in triangle_counts(df).collect())
     assert gated == dist
     assert gated  # triangles exist
+
+    monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED")
+    monkeypatch.setattr(graph, "TRIANGLE_DRIVER_MAX_WEDGES", 0)
+    assert graph.triangle_counts_small(edges) is None
+    over = triangle_counts(df)
+    plan = over._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" not in plan  # the distributed joins ran
+    assert sorted(tuple(r) for r in over.collect()) == dist
 
 
 def test_kmeans_n_rows_hint_matches_count_path(spark):

@@ -200,7 +200,7 @@ def test_run_available_now_raises_on_hung_drain(spark, monkeypatch):
 # ---------------------------------------------------------------------------
 
 
-def test_cc_small_graph_path_matches_star(spark):
+def test_cc_small_graph_path_matches_star(spark, monkeypatch):
     from journal_batch_processer_spark.operators import graph
 
     edges = spark.createDataFrame(
@@ -209,15 +209,15 @@ def test_cc_small_graph_path_matches_star(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (5, 5)],
         "src long, dst long",
     )
+    monkeypatch.delenv("SPARK_GRAFT_FORCE_DISTRIBUTED", raising=False)
     small = sorted(
         (r.n, r.component)
         for r in graph.connected_components_star(edges).collect()
     )
+    monkeypatch.setenv("SPARK_GRAFT_FORCE_DISTRIBUTED", "1")
     star = sorted(
         (r.n, r.component)
-        for r in graph.connected_components_star(
-            edges, small_graph_edges=0
-        ).collect()
+        for r in graph.connected_components_star(edges).collect()
     )
     assert small == star
     assert dict(small)[4] == 1 and dict(small)[11] == 10

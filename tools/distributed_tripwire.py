@@ -1,10 +1,11 @@
 """Timed tripwire for the DISTRIBUTED branches of the adaptive
 small-input driver gates (VERDICT r13 #2): at test SFs the gated keys
-(graph_kcore, graph_labelprop, dedup_cluster's closure, the kmeans
-expression gate) always take the driver-side branch, so a regression
-introduced into the distributed rounds is invisible to every normal
-bench row. This tool forces the distributed branch via
-SPARK_GRAFT_FORCE_DISTRIBUTED=1 (session.force_distributed), times
+(graph_kcore, graph_labelprop, dedup_cluster's closure, graph_triangles,
+the PQ / IVF-PQ refine fetch, the kmeans expression gate) always take
+the driver-side branch, so a regression introduced into the
+distributed rounds is invisible to every normal bench row. This tool
+forces the distributed branch via SPARK_GRAFT_FORCE_DISTRIBUTED=1
+(which makes session.small_input, the one gate, answer False), times
 each key with the bench methodology (min over reps, count action,
 release_all between keys), VERIFIES the forced output row set equals
 the gated path's, and writes one JSON artifact to bench_runs/.
