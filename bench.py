@@ -18,6 +18,10 @@ triggers extra reps, and the reported per-query figure is min-over-reps
 (the standard estimator of true cost absent interference). The JSON
 carries per-query and whole-run steal fractions so a reader can tell a
 plan regression from a noisy host.
+
+This module is also the one timing core of the repo: ``open_session``,
+``time_key`` and ``write_artifact`` are what tools/isolate_bench.py and
+tools/distributed_tripwire.py time and record with.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ import json
 import os
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -168,6 +173,12 @@ def _interval_frac(before, after):
     return round((after[1] - before[1] + after[2] - before[2]) / dt, 4)
 
 
+def _sample():
+    """(wall clock, /proc/stat sample) at one instant: the two ends of
+    a timed rep."""
+    return time.perf_counter(), _proc_stat()
+
+
 class _StreamProgressCollector:
     """StreamingQueryListener capturing per-batch rates/latencies so a
     streaming regression is visible in the bench artifact the way batch
@@ -211,11 +222,81 @@ class _StreamProgressCollector:
         return _L()
 
 
-def main() -> None:
+RUNS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_runs")
+
+
+class KeyTiming(NamedTuple):
+    best: float  # min over reps, seconds (rounded like ``walls``)
+    steal_at_best: float  # steal+iowait fraction of the best rep
+    walls: list[float]  # every rep's wall; rep 1 is cold
+    rows: int  # count() of the result, -1 under ``noop``
+
+
+def open_session(app: str):
+    """``(spark, sf_dir)``: a session over $SPARK_GRAFT_SF_DIR after the
+    shared warm-up (JVM + parquet footer reads)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-    spark = get_spark("jbp-bench")
+    spark = get_spark(app)
     spark.sparkContext.setLogLevel("ERROR")
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
+    return spark, sf_dir
+
+
+def time_key(spark, sf_dir: str, key: str, noop: bool = False) -> KeyTiming:
+    """Time one registry key as a full action (``count()``, or a noop-sink
+    write when ``noop``), min over 2..MAX_REPS reps. Each rep's jobs carry
+    the key as their description. Pinned relations are shared by the
+    reps of one key and released once, after the loop, so nothing stays
+    pinned into the next key."""
+    fn = REGISTRY[key].fn
+    best, best_steal, rows = float("inf"), 0.0, -1
+    walls: list[float] = []
+    while len(walls) < MAX_REPS:
+        spark.sparkContext.setJobDescription(key)
+        t0, s0 = _sample()
+        df = fn(spark, sf_dir)
+        if noop:
+            df.write.format("noop").mode("overwrite").save()
+        else:
+            rows = df.count()
+        t1, s1 = _sample()
+        wall = t1 - t0
+        frac = _interval_frac(s0, s1)
+        walls.append(round(wall, 3))
+        improving = wall < best * 0.85  # JIT/codegen still warming
+        if wall < best:
+            best, best_steal = wall, frac
+        # always take 2 reps; buy more while the best rep ran under
+        # visible steal/iowait OR the latest rep still improved the
+        # best by >15% (whole-stage codegen warms over the first
+        # executions of a heavy plan — min-of-2 under-measures it)
+        if len(walls) >= 2 and best_steal <= STEAL_RETRY_FRAC and not improving:
+            break
+    release_all()
+    spark.sparkContext.setJobDescription(None)
+    return KeyTiming(round(best, 3), best_steal, walls, rows)
+
+
+def write_artifact(name: str, obj: dict, suffix: str = "") -> str:
+    """Write ``obj`` as one JSON line to
+    ``bench_runs/<name>_<UTC stamp><suffix>.json`` and return that
+    relative path. Best-effort: a failed write is reported on stderr,
+    never raised, so a run's stdout result survives it."""
+    fname = f"{name}_{time.strftime('%Y%m%dT%H%M%SZ', time.gmtime())}{suffix}.json"
+    rel = os.path.join(os.path.basename(RUNS_DIR), fname)
+    try:
+        os.makedirs(RUNS_DIR, exist_ok=True)
+        with open(os.path.join(RUNS_DIR, fname), "w") as f:
+            f.write(json.dumps(obj) + "\n")
+        print(f"# artifact: {rel}", file=sys.stderr)
+    except OSError as e:  # pragma: no cover - artifact write best-effort
+        print(f"# artifact write failed: {e}", file=sys.stderr)
+    return rel
+
+
+def main() -> None:
+    spark, sf_dir = open_session("jbp-bench")
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     streams = _StreamProgressCollector()
     listener = None
     try:
@@ -223,9 +304,6 @@ def main() -> None:
         spark.streams.addListener(listener)
     except Exception:  # noqa: BLE001 - listener is observability only
         listener = None
-
-    # warm-up: JVM + parquet footer reads
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
     run_start = _proc_stat()
     timings: dict[str, float] = {}
@@ -238,43 +316,18 @@ def main() -> None:
     # comparability.
     rep_times: dict[str, list[float]] = {}
     for name in BENCH_QUERIES:
-        fn = REGISTRY[name].fn
-        best, best_steal, n, reps = float("inf"), 0.0, 0, 0
-        walls: list[float] = []
-        while reps < MAX_REPS:
-            s0 = _proc_stat()
-            t0 = time.perf_counter()
-            n = fn(spark, sf_dir).count()
-            wall = time.perf_counter() - t0
-            frac = _interval_frac(s0, _proc_stat())
-            reps += 1
-            walls.append(round(wall, 3))
-            improving = wall < best * 0.85  # JIT/codegen still warming
-            if wall < best:
-                best, best_steal = wall, frac
-            # always take 2 reps; buy more while the best rep ran under
-            # visible steal/iowait OR the latest rep still improved the
-            # best by >15% (whole-stage codegen warms over the first
-            # executions of a heavy plan — min-of-2 under-measures it)
-            if reps >= 2 and best_steal <= STEAL_RETRY_FRAC and not improving:
-                break
-        timings[name] = round(best, 3)
-        steal_at_best[name] = best_steal
-        rep_counts[name] = reps
-        rep_times[name] = walls
-        # scoped caches (ADVICE r06): released per-QUERY, after the rep
-        # loop — reps of one query share pinned relations exactly as
-        # every prior round's estimator did (cross-round comparability),
-        # but nothing stays pinned into the next query or the session
-        release_all()
+        t = time_key(spark, sf_dir, name)
+        timings[name] = t.best
+        steal_at_best[name] = t.steal_at_best
+        rep_counts[name] = len(t.walls)
+        rep_times[name] = t.walls
         print(
-            f"# {name}: {timings[name]}s ({n} rows, {reps} reps, "
-            f"steal@best={best_steal})",
+            f"# {name}: {t.best}s ({t.rows} rows, {len(t.walls)} reps, "
+            f"steal@best={t.steal_at_best})",
             file=sys.stderr,
         )
 
     total = round(sum(timings.values()), 3)
-    fname = f"bench_{time.strftime('%Y%m%dT%H%M%SZ', time.gmtime())}_sf{sf}.json"
     # Full-detail artifact (reps, estimator, streams, host steal): every
     # run keeps its JSON (VERDICT r04 #5: a headline number must always
     # have a committed artifact behind it).
@@ -302,14 +355,7 @@ def main() -> None:
             "cpus": os.cpu_count(),
         },
     }
-    runs_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_runs")
-    try:
-        os.makedirs(runs_dir, exist_ok=True)
-        with open(os.path.join(runs_dir, fname), "w") as f:
-            f.write(json.dumps(result) + "\n")
-        print(f"# artifact: bench_runs/{fname}", file=sys.stderr)
-    except OSError as e:  # pragma: no cover - artifact write best-effort
-        print(f"# artifact write failed: {e}", file=sys.stderr)
+    artifact = write_artifact("bench", result, f"_sf{sf}")
     # Stdout gets a COMPACT line: the driver records only the last ~2KB
     # of stdout and JSON-parses the line it finds there, so the full
     # artifact (streams + per-query steal) overflows the capture window
@@ -323,7 +369,7 @@ def main() -> None:
             "queries": timings,
             "sf": sf,
             "steal_frac": _interval_frac(run_start, _proc_stat()),
-            "artifact": f"bench_runs/{fname}",
+            "artifact": artifact,
         },
         separators=(",", ":"),
     )
@@ -337,7 +383,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": {},
                 "sf": sf,
-                "artifact": f"bench_runs/{fname}",
+                "artifact": artifact,
             },
             separators=(",", ":"),
         )

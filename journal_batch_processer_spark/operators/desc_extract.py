@@ -69,8 +69,6 @@ P_SPLIT = (
     + r"(" + _MONTH + r")\s*((?<!\d)\d{2,4})\s*\)?[ \t]*$"
 )
 
-PATTERN_NAMES = ("StdMatch", "YearBeforeMonth", "SplitYears")
-
 # Group-bundle markers: one regex execution per pattern per row.
 # ``regexp_extract`` re-runs the whole (backtracking) regex for every
 # group index, so extracting 5 groups costs 5 matches; an anchored

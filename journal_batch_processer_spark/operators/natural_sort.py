@@ -21,7 +21,6 @@ VOL_PATTERN = r"^(?:[sS][eE][rR]\.?\s*)?(\d+)?\s*(?:[vV][oO]?[lL]?\.?\s*)(\d+)"
 
 PRE_VOL_COL = "__pre_vol"
 VOL_COL = "__vol"
-ROW_SEQ_COL = "__row_seq"
 
 
 def _int_group(desc: Column, idx: int) -> Column:

@@ -1480,7 +1480,7 @@ def kmeans_integer_distributed(
     cents = [list(r["qv"]) for r in seed_rows]
 
     # r14: the r13 gate's count() was the only sub-gate job added to
-    # the local path and an interleaved A/B (tools/ab_round14.py,
+    # the local path and an interleaved A/B (OPTIMIZATION_r14.md §2,
     # 0/7 round wins for the gated version) showed it cost a real
     # ~0.2 s — callers that know the exact row count (e.g. from the
     # parquet footer metadata of an un-filtered scan) pass it in and

@@ -26,9 +26,19 @@ group is tiny and the shuffle is a clean hash partition by MMS ID).
 
 A pure-window fast path (`year_impute_window`) covers the common case
 where no 2-digit year needs a *repaired* row as its anchor; it stays
-entirely in whole-stage codegen and is the 100 TB default. The two
-paths agree except on chained 2-digit years that straddle a century
-boundary (SURVEY.md §2e).
+entirely in whole-stage codegen. It is opt-in: ``split_stage`` and the
+CLI default to the exact path. Both paths stay because neither wins
+everywhere:
+
+- at sf0.1 the window path is faster: best 0.63–0.87 s vs 1.42–1.72 s
+  for the exact path (``tools/isolate_bench.py``, local[4], two
+  interleaved blocks, one process each);
+- at 100× (15M rows) it is slower: 31.5 s vs 20.9 s
+  (SWEEP_r13_rows.json);
+- it differs from the exact path on chained 2-digit years that
+  straddle a century boundary (SURVEY.md §2e;
+  tests/test_golden_pipeline.py
+  ``test_window_fast_path_agrees_on_unchained_groups``).
 """
 
 from __future__ import annotations

@@ -90,14 +90,9 @@ def split_stage(
             "Chron J", month_normalize(F.col("Chron J"), strict_reference_mode)
         )
 
-    if has_desc:
-        df = df.orderBy("MMS ID", PRE_VOL_COL, VOL_COL, "Description")
-    else:
-        df = df.orderBy("MMS ID")
-
-    if has_desc:
-        df = df.drop(PRE_VOL_COL, VOL_COL)
-    return df
+    # the sort keys computed above are reused, then dropped (a no-op
+    # without Description)
+    return natural_sort(df).drop(PRE_VOL_COL, VOL_COL)
 
 
 class UpdateResult(NamedTuple):

@@ -375,8 +375,8 @@ def q_kmeans_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact row count from the parquet footers (driver-side metadata
     # read, no Spark job): _embs is an un-filtered row-preserving scan,
     # so the footer count IS the corpus size the operator's scale gate
-    # needs — r14, replaces the gate's count() job (ab_round14 showed
-    # it cost ~0.2 s at sf0.1)
+    # needs — r14, replaces the gate's count() job (the interleaved A/B
+    # in OPTIMIZATION_r14.md §2 showed it cost ~0.2 s at sf0.1)
     import os as _os
 
     from journal_batch_processer_spark.metadata import parquet_row_count

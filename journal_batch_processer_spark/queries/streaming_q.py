@@ -80,8 +80,9 @@ def _events_stream_dir(sf_dir: str) -> str:
 # default (= core count) is a cluster-parallelism constant, not a data-derived
 # one: at sf0.1 the 100k-row micro-batch paid 32 state partitions of store
 # open/commit/iteration fixed cost per batch INCLUDING the no-data timer
-# batch. Interleaved measurement (tools/exp_stream_partitions.py, 3 rounds
-# per count, BASELINE.md protocol) at sf0.1:
+# batch. Interleaved measurement (OPTIMIZATION_r14.md §1, rows in
+# plans/r14/stream_partitions_experiment.txt; 3 rounds per count,
+# BASELINE.md protocol) at sf0.1:
 #
 #   stream_tumble  p=32/8/4/2/1  min wall 1.96/1.27/1.30/1.13/1.00 s
 #   stream_session p=32/16/8/4/1 min wall 5.28/3.66/4.08/5.45/12.58 s

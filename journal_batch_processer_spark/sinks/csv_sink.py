@@ -23,11 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-STAGE_MESSAGES = {
-    "f_": "Formatted data written to ",
-    "s_": "Pattern-matched data written to ",
-}
-
 
 def stage_output_name(prefix: str, input_name: str, strict_reference_mode: bool = False) -> str:
     """``f_``/``s_`` prefixes are stripped before prepending the new one;

@@ -1,10 +1,11 @@
-"""Isolated per-key timing: min-over-reps of a single registry key in a
-fresh session, bench.py methodology (count action, release_all between
-keys, steal-aware), plus optional noop-sink timing (guide §1.4).
+"""Isolated per-key timing: each key timed in one fresh session with
+bench.py's estimator (``bench.time_key``: count action, min over
+2..MAX_REPS steal-aware reps, release_all after each key), or with a
+noop-sink write instead of the count (guide §1.4).
 
-    python tools/isolate_bench.py [--reps 5] [--noop] key [key...]
+    python tools/isolate_bench.py [--noop] key [key...]
 
-Prints one line per key: best wall, reps, steal@best, rows.
+Prints one line per key: best wall, rep walls, steal@best, rows.
 """
 
 from __future__ import annotations
@@ -12,49 +13,23 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _interval_frac, _proc_stat  # noqa: E402
-from journal_batch_processer_spark.cache import release_all  # noqa: E402
-from journal_batch_processer_spark.queries import REGISTRY  # noqa: E402
-from journal_batch_processer_spark.session import get_spark  # noqa: E402
+from bench import open_session, time_key  # noqa: E402
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--noop", action="store_true")
     ap.add_argument("keys", nargs="+")
     args = ap.parse_args()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark("jbp-isolate")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # warm-up
+    spark, sf_dir = open_session("jbp-isolate")
     for key in args.keys:
-        fn = REGISTRY[key].fn
-        best, best_steal, n = float("inf"), 0.0, 0
-        walls = []
-        for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"isolate:{key}")
-            s0 = _proc_stat()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            if args.noop:
-                df.write.format("noop").mode("overwrite").save()
-                n = -1
-            else:
-                n = df.count()
-            wall = time.perf_counter() - t0
-            frac = _interval_frac(s0, _proc_stat())
-            walls.append(round(wall, 3))
-            if wall < best:
-                best, best_steal = wall, frac
-        release_all()
+        t = time_key(spark, sf_dir, key, noop=args.noop)
         print(
-            f"{key}: best={best:.3f}s reps={walls} steal@best={best_steal}"
-            f" rows={n}",
+            f"{key}: best={t.best:.3f}s reps={t.walls} "
+            f"steal@best={t.steal_at_best} rows={t.rows}",
             flush=True,
         )
 
