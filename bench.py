@@ -230,6 +230,7 @@ class KeyTiming(NamedTuple):
     steal_at_best: float  # steal+iowait fraction of the best rep
     walls: list[float]  # every rep's wall; rep 1 is cold
     rows: int  # count() of the result, -1 under ``noop``
+    capped: bool  # stopped at MAX_REPS while the last rep still improved >15%
 
 
 def open_session(app: str):
@@ -274,7 +275,8 @@ def time_key(spark, sf_dir: str, key: str, noop: bool = False) -> KeyTiming:
             break
     release_all()
     spark.sparkContext.setJobDescription(None)
-    return KeyTiming(round(best, 3), best_steal, walls, rows)
+    capped = len(walls) == MAX_REPS and improving
+    return KeyTiming(round(best, 3), best_steal, walls, rows, capped)
 
 
 def write_artifact(name: str, obj: dict, suffix: str = "") -> str:
@@ -315,12 +317,15 @@ def main() -> None:
     # min-over-reps headline estimator is UNCHANGED for cross-round
     # comparability.
     rep_times: dict[str, list[float]] = {}
+    capped: list[str] = []
     for name in BENCH_QUERIES:
         t = time_key(spark, sf_dir, name)
         timings[name] = t.best
         steal_at_best[name] = t.steal_at_best
         rep_counts[name] = len(t.walls)
         rep_times[name] = t.walls
+        if t.capped:
+            capped.append(name)
         print(
             f"# {name}: {t.best}s ({t.rows} rows, {len(t.walls)} reps, "
             f"steal@best={t.steal_at_best})",
@@ -346,6 +351,9 @@ def main() -> None:
         # are released after the rep loop, so later reps of pinned keys
         # run warm — VERDICT r13 #3/#6)
         "rep_times": rep_times,
+        # keys whose best is an upper bound, not a converged minimum:
+        # the rep cap hit while the last rep still improved >15%
+        "capped": capped,
         "estimator": f"min over up to {MAX_REPS} reps "
         "(retry on steal>5% or >15% improvement); r01 baseline was min-of-2",
         "streams": streams.by_name,

@@ -24,24 +24,21 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..metadata import file_fingerprint, memo_get
 from ..session import small_input
 
 # Process-level memo for deterministic training (centroids/codebooks):
 # training is a pure function of (file identity, hyperparameters), but
 # it re-ran on EVERY query construction — each ANN key trains once for
 # the Spark plan and once for the oracle, and bench reps multiply that.
-# Keyed by (abspath, size, mtime_ns, params) so a regenerated fixture
-# invalidates; deep-copied on return so a caller can't poison the cache.
-_TRAIN_MEMO: dict[tuple, object] = {}
+# Keyed by the file's fingerprint and params so a regenerated fixture
+# invalidates; deep-copied on return so a caller can't poison the memo.
+_TRAINED: dict[tuple, object] = {}
 
 
 def _train_memo(parquet_path: str, tag: str, params: tuple, compute):
-    st = os.stat(parquet_path)
-    key = (tag, os.path.abspath(parquet_path), st.st_size, st.st_mtime_ns,
-           params)
-    if key not in _TRAIN_MEMO:
-        _TRAIN_MEMO[key] = compute()
-    return copy.deepcopy(_TRAIN_MEMO[key])
+    key = (tag, file_fingerprint([os.path.abspath(parquet_path)]), params)
+    return copy.deepcopy(memo_get(_TRAINED, key, compute))
 
 
 def dot_expr(
@@ -191,7 +188,7 @@ def train_ivf_centroids(
 ) -> list[list[float]]:
     """Memoized front door for :func:`_train_ivf_centroids` (training
     is a pure function of file identity + hyperparameters; see
-    _TRAIN_MEMO)."""
+    _train_memo)."""
     return _train_memo(
         parquet_path,
         "ivf",
@@ -818,7 +815,7 @@ def train_pq_codebooks(
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """Memoized front door for :func:`_train_pq_codebooks` (see
-    _TRAIN_MEMO)."""
+    _train_memo)."""
     return _train_memo(
         parquet_path,
         "pq",

@@ -30,6 +30,7 @@ from journal_batch_processer_spark.queries.llmops import (
     _docs,
     _embs,
 )
+from journal_batch_processer_spark.session import oracle_sf_dir
 
 # ---------------------------------------------------------------------------
 # corpus mixing
@@ -288,11 +289,7 @@ assigned AS (
 
 
 def _embed_kmeans_oracle_sql() -> str:
-    import os as _os
-
-    sf_dir = _os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = oracle_sf_dir()
     return f"""
 WITH {_assigned_cte(_centroids(sf_dir))}
 SELECT vec_id, cell, ROUND(sim, 6) AS cos_centroid FROM assigned
@@ -317,11 +314,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_semantic_oracle_sql() -> str:
-    import os as _os
-
-    sf_dir = _os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = oracle_sf_dir()
     dot_xy = _DOT_SQL.replace("a.", "x.").replace("b.", "y.")
     return f"""
 WITH {_assigned_cte(_centroids(sf_dir))},

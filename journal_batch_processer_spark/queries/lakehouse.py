@@ -34,13 +34,13 @@ rebuilt as a table format.
 
 from __future__ import annotations
 
-import json
+import functools
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from journal_batch_processer_spark.metadata import fixture_dir, scratch_dir
 from journal_batch_processer_spark.operators.table_format import (
     SnapshotTable,
     table_fixture_root,
@@ -89,21 +89,38 @@ def _gen2(ev: DataFrame) -> DataFrame:
     )
 
 
-def materialize_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build (or reuse) the six-commit fixture table for ``sf_dir``.
-    Idempotent across processes: a marker records the fixture revision
-    and expected head version; anything else rebuilds from scratch."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(tag)
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "head": 6, "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 6:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
+def _table_fixture(
+    prefix: str, version: int, source: str = "events.parquet", **key
+):
+    """Decorator: ``build(spark, sf_dir, root)`` writes a snapshot table
+    at ``root``; the decorated ``(spark, sf_dir) -> root`` builds it
+    under ``table_fixture_root(prefix + tag)`` once per revision of
+    ``sf_dir``'s ``source`` file (metadata.fixture_dir) and reuses it
+    while its head is still ``version``."""
+
+    def wrap(build):
+        @functools.wraps(build)
+        def materialize(spark: SparkSession, sf_dir: str) -> str:
+            tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+            root = table_fixture_root(prefix + tag)
+            return fixture_dir(
+                root,
+                {"rev": FIXTURE_REV, **key, "sf_dir": sf_dir},
+                [os.path.join(sf_dir, source)],
+                lambda: build(spark, sf_dir, root),
+                valid=lambda: SnapshotTable(root).latest_version() == version,
+            )
+
+        return materialize
+
+    return wrap
+
+
+@_table_fixture("", 6, head=6)
+def materialize_table(spark: SparkSession, sf_dir: str, root: str) -> None:
+    """Build (or reuse) the six-commit fixture table for ``sf_dir``:
+    rebuilt from scratch whenever the fixture revision or
+    ``events.parquet`` changes, or the head is not v6."""
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -127,9 +144,6 @@ def materialize_table(spark: SparkSession, sf_dir: str) -> str:
         new_columns=[("priority", "bigint")],
     )
     t.compact(spark, COMPACT_TARGET, committed_at_us=6_000_000)
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def _with_priority(df: DataFrame) -> DataFrame:
@@ -289,24 +303,14 @@ WHERE event_id BETWEEN {lo} AND {hi}
 SQL_TABLE_COMPACT_READ = SQL_TABLE_EVOLUTION_READ
 
 
-def _materialize_delete_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("del_", 3, op="delete")
+def _materialize_delete_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Second fixture chain (delete/vacuum): create → append all
     events (range-clustered, 8 files) → range DELETE of
     [max_id div 4, max_id div 2] → vacuum(retain_last=2). The delete
     bounds derive from the key domain, so the three-way file split
     (dropped whole / rewritten boundary / carried) binds at EVERY sf,
     and the oracle recomputes the same bounds as scalar subqueries."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"del_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "delete", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 3:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -323,9 +327,6 @@ def _materialize_delete_table(spark: SparkSession, sf_dir: str) -> str:
     # reclaim the files the delete dropped/rewrote (they are referenced
     # only by v2); v2's manifest goes with them — the retention pass
     t.vacuum(retain_last=2)
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_table_delete_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -346,7 +347,8 @@ WHERE event_id NOT BETWEEN (SELECT MAX(event_id) // 4 FROM events)
 """
 
 
-def _materialize_mor_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("mor_", 6, op="mor")
+def _materialize_mor_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Merge-on-read fixture chain: create → append all events →
     EQUALITY DELETE of event_id % 10 == 3 as a delete FILE (no data
     rewrite) → re-append a tripled-value subset of the deleted rows
@@ -356,17 +358,6 @@ def _materialize_mor_table(spark: SparkSession, sf_dir: str) -> str:
     keeping v4..v6, which must preserve the delete files v5 still
     references (reclaiming them would corrupt the MOR time-travel
     read the driver checks)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"mor_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "mor", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 6:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -399,9 +390,6 @@ def _materialize_mor_table(spark: SparkSession, sf_dir: str) -> str:
     )
     t.apply_deletes(spark, committed_at_us=6_000_000)
     t.vacuum(retain_last=3)
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_table_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -441,7 +429,8 @@ def q_table_mor_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_TABLE_MOR_APPLY = SQL_TABLE_MOR_READ
 
 
-def _materialize_mor_pos_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("morpos_", 6, op="mor_pos")
+def _materialize_mor_pos_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """POSITION-delete fixture chain (the Iceberg v2 shape equality
     deletes can't express): create → append ALL events (copy 1) →
     append ALL events again with value*10 (copy 2 — every event_id now
@@ -452,17 +441,6 @@ def _materialize_mor_pos_table(spark: SparkSession, sf_dir: str) -> str:
     removing both copies of those keys) → apply_deletes folding both
     delete kinds in one rewrite → vacuum keeping v4..v6 (must preserve
     both pending delete files v5 still references)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"morpos_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "mor_pos", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 6:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -492,9 +470,6 @@ def _materialize_mor_pos_table(spark: SparkSession, sf_dir: str) -> str:
     )
     t.apply_deletes(spark, committed_at_us=6_000_000)
     t.vacuum(retain_last=3)
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_table_mor_pos_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -538,7 +513,8 @@ def q_table_mor_pos_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_TABLE_MOR_POS_APPLY = SQL_TABLE_MOR_POS_READ
 
 
-def _materialize_merge_mor_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("mergemor_", 5, op="merge_mor")
+def _materialize_merge_mor_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """MERGE-ON-READ upsert fixture chain: create → append ALL events
     → MOR equality delete (event_id % 10 == 3) → merge_mor of the
     standard merge batch (updates value*2 for [100,299]; inserts
@@ -548,17 +524,6 @@ def _materialize_merge_mor_table(spark: SparkSession, sf_dir: str) -> str:
     ending in %3. Then apply_deletes folds the equality delete AND the
     merge's positional delete in one rewrite, and vacuum keeps
     v3..v5."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"mergemor_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "merge_mor", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 5:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -576,9 +541,6 @@ def _materialize_merge_mor_table(spark: SparkSession, sf_dir: str) -> str:
     t.merge_mor(_merge_batch(ev), "event_id", committed_at_us=4_000_000)
     t.apply_deletes(spark, committed_at_us=5_000_000)
     t.vacuum(retain_last=3)
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_table_merge_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -620,22 +582,12 @@ def q_table_merge_mor_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_TABLE_MERGE_MOR_APPLY = SQL_TABLE_MERGE_MOR_READ
 
 
-def _materialize_bucket_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("bucket_", 3, op="bucket")
+def _materialize_bucket_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Hidden-partitioning fixture with SPEC EVOLUTION: all events
     appended under bucket(user_id, 8), then a derived second
     generation under bucket(user_id, 4) — two specs live in one
     table, each file pruning under the spec it was written with."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"bucket_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "bucket", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 3:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -652,9 +604,6 @@ def _materialize_bucket_table(spark: SparkSession, sf_dir: str) -> str:
         "event_type",
     )
     t.append(gen2, committed_at_us=3_000_000, bucket_by=("user_id", 4))
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_table_partition_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -692,8 +641,6 @@ def q_stream_table_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once end-to-end (the Delta txn/foreachBatch pattern; the
     replay path itself is pinned by a unit test). Drained availableNow,
     the table must hold exactly the source events."""
-    import tempfile as _tf
-
     from journal_batch_processer_spark.queries.streaming_q import (
         _events_stream_dir,
     )
@@ -701,8 +648,8 @@ def q_stream_table_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream,
     )
 
-    root = _tf.mkdtemp(prefix="jbp_snapstream_")
-    ckpt = _tf.mkdtemp(prefix="jbp_snapstream_ckpt_")
+    root = scratch_dir("jbp_snapstream_")
+    ckpt = scratch_dir("jbp_snapstream_ckpt_")
     schema = [
         ("event_id", "bigint"),
         ("user_id", "bigint"),
@@ -895,8 +842,6 @@ def q_stream_table_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 consumes the merge's insert/delete pairs plus the third append.
     Any lost delete, double-emitted carried row, or wrong version
     stamp hash-fails."""
-    import tempfile as _tf
-
     from journal_batch_processer_spark.queries.streaming_q import _await_drain
     from journal_batch_processer_spark.sources.python_source import (
         register_once,
@@ -906,7 +851,7 @@ def q_stream_table_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_once(spark, TableStreamSource)
-    root = _tf.mkdtemp(prefix="jbp_tcdc_")
+    root = scratch_dir("jbp_tcdc_")
     ckpt, outdir = os.path.join(root, "_ckpt"), os.path.join(root, "_out")
     ev = _base_events(spark, sf_dir)
     t = SnapshotTable.create(
@@ -1009,8 +954,6 @@ def q_stream_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     at |groups| rows — folds into a driver dict; at warehouse scale
     the same fold is a MERGE into a state table (upsert_merge), same
     algebra, no other change."""
-    import tempfile as _tf
-
     from journal_batch_processer_spark.queries.streaming_q import _await_drain
     from journal_batch_processer_spark.sources.python_source import (
         register_once,
@@ -1020,7 +963,7 @@ def q_stream_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_once(spark, TableStreamSource)
-    root = _tf.mkdtemp(prefix="jbp_smv_")
+    root = scratch_dir("jbp_smv_")
     ckpt = os.path.join(root, "_ckpt")
     ev = _base_events(spark, sf_dir)
     t = SnapshotTable.create(
@@ -1108,22 +1051,12 @@ FROM head GROUP BY event_type
 )
 
 
-def _materialize_dim_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("dimjoin_", 3, op="dimjoin")
+def _materialize_dim_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Dimension-table fixture for JOIN-view maintenance: v2 appends
     one row per distinct user (segment = user_id % 7), v3 COW-merges
     a segment update for user_id % 5 == 2 (+100) plus one brand-new
     user — both deltas materialized in the commit's change feed."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"dimjoin_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "dimjoin", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 3:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     users = (
         _base_events(spark, sf_dir)
         .select("user_id")
@@ -1148,9 +1081,6 @@ def _materialize_dim_table(spark: SparkSession, sf_dir: str) -> str:
         )
     )
     t.merge(batch, "user_id", committed_at_us=3_000_000)
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_matview_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1218,21 +1148,11 @@ FROM s4 a JOIN dim1 b ON a.user_id = b.user_id
 )
 
 
-def _materialize_restore_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("rest_", 4, op="restore")
+def _materialize_restore_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Third fixture chain (restore): create → append evens → append
     odds → RESTORE(2). Head state must equal the evens-only snapshot
     while all four manifests remain readable."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"rest_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "restore", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 4:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -1250,9 +1170,6 @@ def _materialize_restore_table(spark: SparkSession, sf_dir: str) -> str:
         committed_at_us=3_000_000,
     )
     t.restore(2, committed_at_us=4_000_000)
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_table_restore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1270,7 +1187,8 @@ WHERE event_id % 2 = 0
 """
 
 
-def _materialize_zorder_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("z_", 3, op="zorder")
+def _materialize_zorder_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Fourth fixture chain (OPTIMIZE ZORDER): create → append events
     range-clustered on event_id (so user_id min/max per file spans the
     whole domain — user_id predicates prune NOTHING) → optimize_zorder
@@ -1281,17 +1199,6 @@ def _materialize_zorder_table(spark: SparkSession, sf_dir: str) -> str:
     clustering, per-file user_id ranges are tight and user_id pruning
     skips files (pinned by a unit test); content is identical by
     contract."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"z_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "zorder", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 3:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -1308,9 +1215,6 @@ def _materialize_zorder_table(spark: SparkSession, sf_dir: str) -> str:
         f"event_id * 256 div {max_e + 1}",
         committed_at_us=3_000_000,
     )
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_table_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1341,8 +1245,6 @@ def q_table_stream_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     with per-commit attribution, is the oracle surface: a re-emitted
     carried file, a missed append, or a wrong version stamp all
     hash-fail."""
-    import tempfile as _tf
-
     from journal_batch_processer_spark.queries.streaming_q import _await_drain
     from journal_batch_processer_spark.sources.python_source import (
         register_once,
@@ -1352,7 +1254,7 @@ def q_table_stream_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_once(spark, TableStreamSource)
-    root = _tf.mkdtemp(prefix="jbp_tstream_")
+    root = scratch_dir("jbp_tstream_")
     ckpt, outdir = os.path.join(root, "_ckpt"), os.path.join(root, "_out")
     ev = _base_events(spark, sf_dir)
     t = SnapshotTable.create(
@@ -1480,8 +1382,6 @@ def q_stream_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     batched — the property ``resolve`` buys (unit-tested across
     batch splits and replays); the exactly-once batch-id protocol is
     shared with stream_table_append."""
-    import tempfile as _tf
-
     from journal_batch_processer_spark.queries.streaming_q import (
         _events_stream_dir,
     )
@@ -1489,8 +1389,8 @@ def q_stream_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream,
     )
 
-    root = _tf.mkdtemp(prefix="jbp_snapmerge_")
-    ckpt = _tf.mkdtemp(prefix="jbp_snapmerge_ckpt_")
+    root = scratch_dir("jbp_snapmerge_")
+    ckpt = scratch_dir("jbp_snapmerge_ckpt_")
     schema = [
         ("k", "bigint"),
         ("event_id", "bigint"),
@@ -1574,8 +1474,6 @@ def q_stream_table_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract; the read here resolves a stack of one delete file per
     micro-batch, so broadcast-anti-join stacking depth is on this
     hook too."""
-    import tempfile as _tf
-
     from journal_batch_processer_spark.queries.streaming_q import (
         _events_stream_dir,
     )
@@ -1583,8 +1481,8 @@ def q_stream_table_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream,
     )
 
-    root = _tf.mkdtemp(prefix="jbp_snapmergemor_")
-    ckpt = _tf.mkdtemp(prefix="jbp_snapmergemor_ckpt_")
+    root = scratch_dir("jbp_snapmergemor_")
+    ckpt = scratch_dir("jbp_snapmergemor_ckpt_")
     schema = [
         ("k", "bigint"),
         ("event_id", "bigint"),
@@ -1642,7 +1540,8 @@ def q_stream_table_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_STREAM_TABLE_MERGE_MOR = SQL_STREAM_TABLE_MERGE
 
 
-def _materialize_branch_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("branch_", 5, op="branch")
+def _materialize_branch_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """BRANCH fixture chain (the Iceberg branch / fast-forward shape,
     WAP generalized to a line of commits): create → append evens →
     append odds → fork branch ``etl`` → ON THE BRANCH: the standard
@@ -1651,17 +1550,6 @@ def _materialize_branch_table(spark: SparkSession, sf_dir: str) -> str:
     down to its head while the branch is live (branch-referenced
     files must survive) → fast_forward publishes the audited line
     back to main."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"branch_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "branch", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 5:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -1686,9 +1574,6 @@ def _materialize_branch_table(spark: SparkSession, sf_dir: str) -> str:
     # main is still at the fork; its vacuum must protect the branch
     t.vacuum(retain_last=1)
     t.fast_forward("etl")
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_table_branch_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1720,22 +1605,12 @@ FROM ev WHERE event_id % 1000 = 1
 """
 
 
-def _materialize_bloom_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("bloom_", 2, op="bloom")
+def _materialize_bloom_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Bloom-index fixture: all events appended ROUND-ROBIN into 8
     files (every file spans the whole event_id range — min/max stats
     provably prune nothing) with write-time bloom filters on
     event_id."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"bloom_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "bloom", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 2:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -1747,9 +1622,6 @@ def _materialize_bloom_table(spark: SparkSession, sf_dir: str) -> str:
     t.append(
         ev.repartition(8), committed_at_us=2_000_000, bloom_for=["event_id"]
     )
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 BLOOM_PROBE_IDS = (7, 123, 321, 555, 808, 123456789)  # last one absent
@@ -1813,22 +1685,21 @@ def _materialize_clone_table(
         src_id = hashlib.md5(fh.read()).hexdigest()
     tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     root = table_fixture_root(f"clone_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "clone", "sf_dir": sf_dir, "src": src_id}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 2:
-                return src_root, root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
-    t = src.clone(root, committed_at_us=1_000_000)
-    t.delete_range(
-        spark, "event_id", PRUNE_LO, PRUNE_HI, committed_at_us=2_000_000
+
+    def build() -> None:
+        t = src.clone(root, committed_at_us=1_000_000)
+        t.delete_range(
+            spark, "event_id", PRUNE_LO, PRUNE_HI, committed_at_us=2_000_000
+        )
+        t.vacuum(retain_last=1)
+
+    fixture_dir(
+        root,
+        {"rev": FIXTURE_REV, "op": "clone", "sf_dir": sf_dir, "src": src_id},
+        [os.path.join(sf_dir, "events.parquet")],
+        build,
+        valid=lambda: SnapshotTable(root).latest_version() == 2,
     )
-    t.vacuum(retain_last=1)
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
     return src_root, root
 
 
@@ -1862,7 +1733,8 @@ FROM s5 WHERE event_id NOT BETWEEN {PRUNE_LO} AND {PRUNE_HI}
 
 
 
-def _materialize_wap_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("wap_", 7, op="wap")
+def _materialize_wap_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Write-audit-publish fixture chain (7 commits):
 
       v1 create
@@ -1881,17 +1753,6 @@ def _materialize_wap_table(spark: SparkSession, sf_dir: str) -> str:
     WAP pipeline would: stage → read_wap → publish-or-abort. The
     final state (%4 ∈ {0,1,2}) plus the pre-publish and audit views
     are what the registry key exposes."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"wap_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "wap", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 7:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     ev = _base_events(spark, sf_dir)
     schema = [
         ("event_id", "bigint"),
@@ -1936,9 +1797,6 @@ def _materialize_wap_table(spark: SparkSession, sf_dir: str) -> str:
     assert t.latest_version() == 7
     assert t.manifest(6)["operation"] == "wap_publish"
     assert t.manifest(7)["operation"] == "wap_abort"
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_table_wap_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2000,7 +1858,8 @@ FROM tagged GROUP BY phase, event_type
 
 
 
-def _materialize_docs_table(spark: SparkSession, sf_dir: str) -> str:
+@_table_fixture("dix_", 3, source="documents.parquet", op="docs_index", off="max+1")
+def _materialize_docs_table(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Documents-corpus snapshot table (3 commits) for the incremental
     dedup-index key: v1 create (doc_id, text) → v2 append the whole
     `documents` corpus (range-clustered on doc_id) → v3 COW MERGE
@@ -2010,17 +1869,6 @@ def _materialize_docs_table(spark: SparkSession, sf_dir: str) -> str:
     ids never collide with existing docs at ANY scale, and the
     inserts are built near-dups of their source docs, so the
     incremental probe provably finds pairs)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = table_fixture_root(f"dix_{tag}")
-    marker = os.path.join(root, "_fixture.json")
-    want = {"rev": FIXTURE_REV, "op": "docs_index", "off": "max+1", "sf_dir": sf_dir}
-    try:
-        with open(marker) as fh:
-            if json.load(fh) == want and SnapshotTable(root).latest_version() == 3:
-                return root
-    except (OSError, ValueError):
-        pass
-    shutil.rmtree(root, ignore_errors=True)
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
         "doc_id", "text"
     )
@@ -2039,9 +1887,6 @@ def _materialize_docs_table(spark: SparkSession, sf_dir: str) -> str:
         F.concat(F.lit("copy of "), F.col("text")).alias("text"),
     )
     t.merge(updates.unionByName(inserts), "doc_id", committed_at_us=3_000_000)
-    with open(marker, "w") as fh:
-        json.dump(want, fh)
-    return root
 
 
 def q_dedup_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

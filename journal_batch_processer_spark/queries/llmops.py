@@ -47,8 +47,12 @@ from journal_batch_processer_spark.operators.text_analysis import (
     repetition_stats,
     token_stats,
 )
-from journal_batch_processer_spark.metadata import parquet_row_count
-from journal_batch_processer_spark.session import load_events
+from journal_batch_processer_spark.metadata import (
+    fixture_dir,
+    fixture_root,
+    parquet_row_count,
+)
+from journal_batch_processer_spark.session import load_events, oracle_sf_dir
 
 EMB_DIM = 64
 
@@ -912,13 +916,11 @@ def _langid_oracle_sql() -> str:
     """LAZY oracle: trains the identical profiles from the oracle sf
     dir and inlines them as VALUES literals; doc ranking, penalty and
     argmin replayed relationally with the same tie-breaks."""
-    import os as _os
-
     from journal_batch_processer_spark.operators.text_analysis import (
         train_langid_profiles,
     )
 
-    sf_dir = _os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     profiles = train_langid_profiles(f"{sf_dir}/documents.parquet")
 
     def q(s: str) -> str:
@@ -1275,9 +1277,7 @@ def _ivf_oracle_sql(n_centroids: int = 16, n_probe: int = 4, k: int = 5) -> str:
         train_ivf_centroids,
     )
 
-    sf_dir = _os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = oracle_sf_dir()
     cents = train_ivf_centroids(
         _os.path.join(sf_dir, "embeddings.parquet"), n_centroids=n_centroids
     )
@@ -1844,17 +1844,15 @@ def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet — so writer+reader fidelity is value-checked through the
     actual file format, not just the in-memory codec."""
     import os as _os
-    import tempfile as _tf
 
-    from journal_batch_processer_spark import fixture_cache as _fc
-
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-    out = _os.path.join(_tf.gettempdir(), f"jbp_jsonl_{tag}")
+    out = fixture_root("jsonl", sf_dir)
     docs = _docs(spark, sf_dir).select("doc_id", "text", "lang", "source", "n_chars")
-    fp = _fc.source_fingerprint(_os.path.join(sf_dir, "documents.parquet"))
-    if not _fc.is_fresh(out, fp):
-        docs.write.mode("overwrite").json(out)
-        _fc.mark_fresh(out, fp)
+    fixture_dir(
+        out,
+        "jsonl",
+        [_os.path.join(sf_dir, "documents.parquet")],
+        lambda: docs.write.mode("overwrite").json(out),
+    )
     back = spark.read.schema(
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
     ).json(out)
@@ -1884,17 +1882,15 @@ def q_jsonl_scan_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition files do exactly that); prefer zstd/snappy parquet
     or many-file gzip JSONL over few huge .gz blobs."""
     import os as _os
-    import tempfile as _tf
 
-    from journal_batch_processer_spark import fixture_cache as _fc
-
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-    out = _os.path.join(_tf.gettempdir(), f"jbp_jsonl_gz_{tag}")
+    out = fixture_root("jsonl_gz", sf_dir)
     docs = _docs(spark, sf_dir).select("doc_id", "text", "lang", "source", "n_chars")
-    fp = _fc.source_fingerprint(_os.path.join(sf_dir, "documents.parquet"))
-    if not _fc.is_fresh(out, fp):
-        docs.write.mode("overwrite").option("compression", "gzip").json(out)
-        _fc.mark_fresh(out, fp)
+    fixture_dir(
+        out,
+        "jsonl_gz",
+        [_os.path.join(sf_dir, "documents.parquet")],
+        lambda: docs.write.mode("overwrite").option("compression", "gzip").json(out),
+    )
     back = spark.read.schema(
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
     ).json(out)
@@ -3019,12 +3015,8 @@ def q_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes on path — the documented ingest shape for image/audio
     payloads (operators/multimodal.py)."""
     import os as _os
-    import tempfile as _tf
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-    d = _os.path.join(_tf.gettempdir(), f"jbp_blobs_{tag}")
-    _materialize_blobs(sf_dir)
-
+    d = _materialize_blobs(sf_dir)
     scan = spark.read.format("binaryFile").load(_os.path.join(d, "*.bin"))
     return scan.select(
         F.regexp_extract("path", r"[^/]+$", 0).alias("fname"),
@@ -3041,39 +3033,32 @@ FROM read_blob('{tmp}/jbp_blobs_{tag}/*.bin')
 """
 
 
-def _materialize_blobs(sf_dir: str) -> None:
+def _materialize_blobs(sf_dir: str) -> str:
     """Write the first 64 docs' text bytes as payload files (once per
-    sf tag). DuckDB-based so it needs no SparkSession — called both at
+    revision of documents.parquet) and return their dir. DuckDB-based so it needs no SparkSession — called both at
     import time for the oracle's sf0.01 dir (the driver may run the
     oracle BEFORE the Spark query) and from q_binary_ingest for
     whatever sf_dir it receives."""
     import os as _os
-    import tempfile as _tf
 
-    from journal_batch_processer_spark import fixture_cache as _fc
-
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-    d = _os.path.join(_tf.gettempdir(), f"jbp_blobs_{tag}")
+    d = fixture_root("blobs", sf_dir)
     src = _os.path.join(sf_dir, "documents.parquet")
     if not _os.path.exists(src):
-        return
-    fp = _fc.source_fingerprint(src)
-    if _fc.is_fresh(d, fp):
-        return
-    import duckdb as _duck
+        return d
 
-    _os.makedirs(d, exist_ok=True)
-    for old in _os.listdir(d):  # drop payloads from a prior fixture gen
-        if old.endswith(".bin"):
-            _os.unlink(_os.path.join(d, old))
-    rows = _duck.sql(
-        f"SELECT doc_id, text FROM read_parquet('{src}') "
-        "WHERE doc_id < 64 ORDER BY doc_id"
-    ).fetchall()
-    for doc_id, text in rows:
-        with open(_os.path.join(d, f"doc_{doc_id:05d}.bin"), "wb") as f:
-            f.write(text.encode("utf-8"))
-    _fc.mark_fresh(d, fp)
+    def build() -> None:
+        import duckdb as _duck
+
+        _os.makedirs(d)
+        rows = _duck.sql(
+            f"SELECT doc_id, text FROM read_parquet('{src}') "
+            "WHERE doc_id < 64 ORDER BY doc_id"
+        ).fetchall()
+        for doc_id, text in rows:
+            with open(_os.path.join(d, f"doc_{doc_id:05d}.bin"), "wb") as f:
+                f.write(text.encode("utf-8"))
+
+    return fixture_dir(d, "blobs", [src], build)
 
 
 def _binary_ingest_sql() -> str:
@@ -3085,7 +3070,7 @@ def _binary_ingest_sql() -> str:
     import os as _os
     import tempfile as _tf
 
-    sf_dir = _os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = oracle_sf_dir()
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     _materialize_blobs(sf_dir)
     return SQL_BINARY_INGEST_TEMPLATE.format(tmp=_tf.gettempdir(), tag=tag)
@@ -3738,9 +3723,7 @@ def _pq_oracle_sql(
         train_pq_codebooks,
     )
 
-    sf_dir = _os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = oracle_sf_dir()
     books = train_pq_codebooks(
         _os.path.join(sf_dir, "embeddings.parquet"), m=m, ksub=ksub
     )
@@ -3855,9 +3838,7 @@ def _ivfpq_oracle_sql(
         train_pq_codebooks,
     )
 
-    sf_dir = _os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = oracle_sf_dir()
     pq_path = _os.path.join(sf_dir, "embeddings.parquet")
     cents = train_ivf_centroids(pq_path, n_centroids=n_centroids)
     books = train_pq_codebooks(pq_path, m=m, ksub=ksub)

@@ -23,24 +23,44 @@ Reference: BatchUpdate.py has no media surface (EXT per SURVEY §2i).
 
 from __future__ import annotations
 
+import functools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from journal_batch_processer_spark import fixture_cache as _fc
 from journal_batch_processer_spark.cache import pin
+from journal_batch_processer_spark.metadata import fixture_dir, fixture_root
 
 _N_MEDIA = 64  # fixture: one image + one wav per doc_id < 64
 
 
-def _media_dir(sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(tempfile.gettempdir(), f"jbp_media_{tag}")
+def _media_fixture(kind: str, version: str):
+    """Decorator: ``write(d, src)`` writes generated media files into
+    the new directory ``d`` from ``src`` (documents.parquet); the
+    decorated ``(sf_dir) -> d`` builds them once per revision of the
+    source and of the generator ``version`` (metadata.fixture_dir).
+    Each kind has its own sibling root, so one kind's rebuild never
+    deletes another's files."""
+
+    def wrap(write):
+        @functools.wraps(write)
+        def materialize(sf_dir: str) -> str:
+            d = fixture_root(kind, sf_dir)
+            src = os.path.join(sf_dir, "documents.parquet")
+            if not os.path.exists(src):
+                return d
+            return fixture_dir(d, version, [src], lambda: write(d, src))
+
+        return materialize
+
+    return wrap
 
 
-def _materialize_media(sf_dir: str) -> str:
+# generator-version salt: the stamp must change when the SET of
+# generated fixtures changes (r05 added PNGs), not only the source
+@_media_fixture("media", "v21-hierarchical-progressive")
+def _materialize_media(d: str, src: str) -> None:
     """Write real .ppm / .wav files derived deterministically from
     doc_id (source-fingerprinted against documents.parquet so a fixture
     regen rebuilds them). Generation is driver-side setup over 64 tiny
@@ -48,15 +68,6 @@ def _materialize_media(sf_dir: str) -> str:
     import struct
     import wave
 
-    d = _media_dir(sf_dir)
-    src = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(src):
-        return d
-    # generator-version salt: the stamp must change when the SET of
-    # generated fixtures changes (r05 added PNGs), not only the source
-    fp = _fc.source_fingerprint(src) + ":v21-hierarchical-progressive"
-    if _fc.is_fresh(d, fp):
-        return d
     import duckdb
 
     from journal_batch_processer_spark.operators.jpeg import (
@@ -84,10 +95,7 @@ def _materialize_media(sf_dir: str) -> str:
         encode_png_bytes,
     )
 
-    os.makedirs(d, exist_ok=True)
-    for old in os.listdir(d):
-        if old.endswith((".ppm", ".wav", ".png", ".jpg", ".gif", ".avi")):
-            os.unlink(os.path.join(d, old))
+    os.makedirs(d)
     doc_ids = [
         r[0]
         for r in duckdb.sql(
@@ -314,8 +322,6 @@ def _materialize_media(sf_dir: str) -> str:
                 wf.setnchannels(1)
                 wf.setsampwidth(2)
                 wf.writeframes(struct.pack("<h", v) * n_frames)
-    _fc.mark_fresh(d, fp)
-    return d
 
 
 def _decode_scan(
@@ -815,7 +821,8 @@ def _phash_byte(base: int, x: int, y: int) -> int:
     return hashlib.md5(f"{base}:{x}:{y}".encode()).digest()[0]
 
 
-def _materialize_phash_media(sf_dir: str) -> str:
+@_media_fixture("phash", "phash-v1")
+def _materialize_phash_media(d: str, src: str) -> None:
     """64 gray 18×16 PPMs whose pixels are portable md5 bytes of
     (doc_id % 32, x, y) — images i and i+32 share a base raster and
     i ≥ 32 perturbs ~10 scattered pixels by +1 (mod 256), so each
@@ -824,19 +831,9 @@ def _materialize_phash_media(sf_dir: str) -> str:
     ~32-bit distance. Every pixel is recomputable in SQL (md5 is the
     shared portable primitive), so decode → luma → box means → bits
     all carry a full value oracle."""
-    d = os.path.join(_media_dir(sf_dir), "phash")
-    src = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(src):
-        return d
-    fp = _fc.source_fingerprint(src) + ":phash-v1"
-    if _fc.is_fresh(d, fp):
-        return d
     import duckdb
 
-    os.makedirs(d, exist_ok=True)
-    for old in os.listdir(d):
-        if old.endswith(".ppm"):
-            os.unlink(os.path.join(d, old))
+    os.makedirs(d)
     doc_ids = [
         r[0]
         for r in duckdb.sql(
@@ -855,8 +852,6 @@ def _materialize_phash_media(sf_dir: str) -> str:
         with open(os.path.join(d, f"phash_{i:05d}.ppm"), "wb") as f:
             f.write(f"P6\n{_PHASH_W} {_PHASH_H}\n255\n".encode())
             f.write(bytes(raster))
-    _fc.mark_fresh(d, fp)
-    return d
 
 
 def _dhash_words_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -993,7 +988,8 @@ _AFP_BLOCKS = 16
 _AFP_PAIR_MAX_L1 = 200
 
 
-def _materialize_afp_media(sf_dir: str) -> str:
+@_media_fixture("afp", "afp-v1")
+def _materialize_afp_media(d: str, src: str) -> None:
     """64 mono PCM8 WAVs (8 kHz, 1600 samples) whose samples are
     portable md5 bytes of (doc_id % 32, t) — files i and i+32 share a
     base waveform and i ≥ 32 perturbs ~16 scattered samples by +1
@@ -1004,19 +1000,9 @@ def _materialize_afp_media(sf_dir: str) -> str:
     import hashlib
     import wave
 
-    d = os.path.join(_media_dir(sf_dir), "afp")
-    src = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(src):
-        return d
-    fp = _fc.source_fingerprint(src) + ":afp-v1"
-    if _fc.is_fresh(d, fp):
-        return d
     import duckdb
 
-    os.makedirs(d, exist_ok=True)
-    for old in os.listdir(d):
-        if old.endswith(".wav"):
-            os.unlink(os.path.join(d, old))
+    os.makedirs(d)
     doc_ids = [
         r[0]
         for r in duckdb.sql(
@@ -1036,8 +1022,6 @@ def _materialize_afp_media(sf_dir: str) -> str:
             wf.setsampwidth(1)
             wf.setframerate(8000)
             wf.writeframes(bytes(buf))
-    _fc.mark_fresh(d, fp)
-    return d
 
 
 def _afp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1155,7 +1139,8 @@ _VFP_FRAMES = 6
 _VFP_PAIR_MAX_HAMMING = 40  # total over aligned frames
 
 
-def _materialize_vfp_media(sf_dir: str) -> str:
+@_media_fixture("vfp", "vfp-v1")
+def _materialize_vfp_media(d: str, src: str) -> None:
     """64 MJPEG-AVIs of 6 LOSSLESS-JPEG (SOF3) 18×16 gray frames whose
     samples are portable md5 bytes of (doc_id % 32, frame, x, y) —
     lossless coding means the decoded planes are bit-exactly the md5
@@ -1170,19 +1155,9 @@ def _materialize_vfp_media(sf_dir: str) -> str:
         encode_jpeg_lossless,
     )
 
-    d = os.path.join(_media_dir(sf_dir), "vfp")
-    src = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(src):
-        return d
-    fp = _fc.source_fingerprint(src) + ":vfp-v1"
-    if _fc.is_fresh(d, fp):
-        return d
     import duckdb
 
-    os.makedirs(d, exist_ok=True)
-    for old in os.listdir(d):
-        if old.endswith(".avi"):
-            os.unlink(os.path.join(d, old))
+    os.makedirs(d)
     doc_ids = [
         r[0]
         for r in duckdb.sql(
@@ -1207,8 +1182,6 @@ def _materialize_vfp_media(sf_dir: str) -> str:
             frames.append(encode_jpeg_lossless([plane]))
         with open(os.path.join(d, f"vfp_{i:05d}.avi"), "wb") as f:
             f.write(encode_avi_mjpeg(_PHASH_W, _PHASH_H, frames))
-    _fc.mark_fresh(d, fp)
-    return d
 
 
 def _vfp_df(spark: SparkSession, sf_dir: str) -> DataFrame:

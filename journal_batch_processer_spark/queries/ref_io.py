@@ -11,6 +11,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from journal_batch_processer_spark.metadata import (
+    fixture_dir,
+    fixture_root,
+    scratch_dir,
+)
 from journal_batch_processer_spark.pipeline import format_stage, split_stage
 from journal_batch_processer_spark.queries.itemview import (
     BASE_CTE,
@@ -18,7 +23,10 @@ from journal_batch_processer_spark.queries.itemview import (
     MONTHS,
     item_view,
 )
-from journal_batch_processer_spark.sinks.csv_sink import write_stage_csv
+from journal_batch_processer_spark.sinks.csv_sink import (
+    stage_output_name,
+    write_stage_csv,
+)
 from journal_batch_processer_spark.sources.csv_source import read_items_csv
 from journal_batch_processer_spark.sources.xml import (
     ITEM_XML_SCHEMA,
@@ -26,29 +34,24 @@ from journal_batch_processer_spark.sources.xml import (
     xml_serialize,
 )
 
-_CSV_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _ensure_csv(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize lineitem keys as a header CSV once per sf_dir.
+    """Materialize lineitem keys as a header CSV at a stable per-sf
+    root, rebuilt whenever lineitem.parquet changes — even
+    mid-process — instead of serving the previous fixture's bytes."""
+    src = os.path.join(sf_dir, "lineitem.parquet")
+    root = fixture_root("csv_lineitem", sf_dir)
 
-    Keyed on (sf_dir, source fingerprint) so a fixture regeneration —
-    even mid-process — invalidates the cache instead of silently
-    serving the previous fixture's bytes."""
-    from journal_batch_processer_spark.fixture_cache import source_fingerprint
+    def build() -> None:
+        li = spark.read.parquet(src).select(
+            F.col("l_orderkey").cast("string"),
+            F.col("l_linenumber").cast("string"),
+            F.col("l_returnflag"),
+        )
+        write_stage_csv(li, root, "f_", "lineitem.csv")
 
-    key = (sf_dir, source_fingerprint(os.path.join(sf_dir, "lineitem.parquet")))
-    if key in _CSV_CACHE and os.path.exists(_CSV_CACHE[key]):
-        return _CSV_CACHE[key]
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        F.col("l_orderkey").cast("string"),
-        F.col("l_linenumber").cast("string"),
-        F.col("l_returnflag"),
-    )
-    out_dir = tempfile.mkdtemp(prefix="jbp_csv_")
-    path = write_stage_csv(li, out_dir, "f_", "lineitem.csv")
-    _CSV_CACHE[key] = path
-    return path
+    fixture_dir(root, "lineitem.csv", [src], build)
+    return os.path.join(root, stage_output_name("f_", "lineitem.csv"))
 
 
 def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,25 +87,25 @@ SELECT COUNT(*) AS n_rows, CAST(SUM(l_orderkey) AS BIGINT) AS sum_key FROM linei
 # Avro edge (pure-Python DataSource — sources/avro.py)
 # ---------------------------------------------------------------------------
 
-_AVRO_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _ensure_avro(spark: SparkSession, sf_dir: str) -> str:
     """Materialize an orders subset as a TWO-PART deflate Avro
-    container dir once per sf_dir (fingerprint-keyed like the CSV
+    container dir at a stable per-sf root (source-stamped like the CSV
     fixture). ``o_priority`` is written through a genuinely-null union
     branch for every 7th order so the scan exercises both union
     paths."""
+    src = os.path.join(sf_dir, "orders.parquet")
+    out_dir = fixture_root("avro_orders", sf_dir)
+    return fixture_dir(
+        out_dir, "orders.avro", [src], lambda: _write_avro(src, out_dir)
+    )
+
+
+def _write_avro(src: str, out_dir: str) -> None:
     import duckdb
 
-    from journal_batch_processer_spark.fixture_cache import source_fingerprint
     from journal_batch_processer_spark.sources.avro import write_container
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    key = (sf_dir, source_fingerprint(src))
-    if key in _AVRO_CACHE and os.path.exists(_AVRO_CACHE[key]):
-        return _AVRO_CACHE[key]
-    out_dir = tempfile.mkdtemp(prefix="jbp_avro_")
     rows = duckdb.sql(
         f"SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus, "
         f"CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE t.o_orderpriority END AS o_priority "
@@ -121,6 +124,7 @@ def _ensure_avro(spark: SparkSession, sf_dir: str) -> str:
     }
     names = [f["name"] for f in schema["fields"]]
     half = len(rows) // 2
+    os.makedirs(out_dir)
     for pi, chunk in enumerate((rows[:half], rows[half:])):
         write_container(
             os.path.join(out_dir, f"part-{pi}.avro"),
@@ -128,8 +132,6 @@ def _ensure_avro(spark: SparkSession, sf_dir: str) -> str:
             (dict(zip(names, r)) for r in chunk),
             codec="deflate",
         )
-    _AVRO_CACHE[key] = out_dir
-    return out_dir
 
 
 def _register_avro(spark: SparkSession) -> None:
@@ -642,7 +644,6 @@ def q_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked end to end: any dropped/duplicated/mangled row
     hash-fails."""
     import os as _os
-    import tempfile as _tf
 
     from journal_batch_processer_spark.sources.python_source import (
         ShardedLogSink,
@@ -651,7 +652,7 @@ def q_python_datasink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from journal_batch_processer_spark.session import load_events
 
     register_once(spark, ShardedLogSink)
-    out = _tf.mkdtemp(prefix="jbp_sink_")
+    out = scratch_dir("jbp_sink_")
     ev = load_events(spark, sf_dir).select(
         "event_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )

@@ -24,6 +24,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..metadata import scratch_dir
 from ..session import env_int
 
 
@@ -420,16 +421,14 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot equals the batch latest-row-per-key query — the oracle —
     REGARDLESS of batch boundaries, because the latest-row choice is a
     total-order integer struct max and counts are additive."""
-    import tempfile as _tf
-
     from journal_batch_processer_spark.streaming.jobs import (
         read_events_stream,
         read_snapshot,
         upsert_snapshot_sink,
     )
 
-    snap_root = _tf.mkdtemp(prefix="jbp_snap_")
-    ckpt = _tf.mkdtemp(prefix="jbp_snap_ckpt_")
+    snap_root = scratch_dir("jbp_snap_")
+    ckpt = scratch_dir("jbp_snap_ckpt_")
     stream = read_events_stream(spark, _events_stream_dir(sf_dir))
     q = upsert_snapshot_sink(stream, snap_root, ckpt)
     _await_drain(q, "stream_upsert")
@@ -612,8 +611,6 @@ def q_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch per run by design — which is precisely what makes the
     restart loop a meaningful offset-tracking test rather than a
     single-drain formality.)"""
-    import tempfile as _tf
-
     from pyspark.sql import functions as F
 
     from journal_batch_processer_spark.sources.python_source import (
@@ -623,7 +620,7 @@ def q_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_once(spark, TickStreamSource)
-    root = _tf.mkdtemp(prefix="jbp_ticks_")
+    root = scratch_dir("jbp_ticks_")
     ckpt, outdir = f"{root}/ckpt", f"{root}/out"
     for run in range(TICK_BATCHES):
         stream = spark.readStream.format("jbp_ticks").load()
@@ -695,8 +692,6 @@ def q_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     read contract as the parquet sink's _spark_metadata log). The
     read-back aggregate is value-oracled by regenerating the stream
     content in SQL."""
-    import tempfile as _tf
-
     from pyspark.sql import functions as F
 
     from journal_batch_processer_spark.sources.avro import make_avro_source
@@ -708,7 +703,7 @@ def q_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_once(spark, TickStreamSource)
     register_once(spark, make_avro_source())
-    root = _tf.mkdtemp(prefix="jbp_avsink_")
+    root = scratch_dir("jbp_avsink_")
     ckpt, outdir = f"{root}/ckpt", f"{root}/out"
     for run in range(TICK_BATCHES):
         stream = spark.readStream.format("jbp_ticks").load()

@@ -18,17 +18,16 @@ so cross-engine hashes are exact.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from journal_batch_processer_spark.metadata import scratch_dir
 from journal_batch_processer_spark.operators.layout import (
     zorder_key,
     zorder_terms_sql,
 )
 from journal_batch_processer_spark.queries.llmops import _docs
-from journal_batch_processer_spark.session import load_events
+from journal_batch_processer_spark.session import load_events, oracle_sf_dir
 
 
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,7 +37,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     value mangling through the ORC writer/reader hash-fails. The
     aggregate includes a doc_id checksum so row identity — not just
     counts — survives the round-trip."""
-    out = tempfile.mkdtemp(prefix="jbp_orc_")
+    out = scratch_dir("jbp_orc_")
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "source", "n_chars")
     docs.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
@@ -66,7 +65,7 @@ def q_xml_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     escaping/type mangling through the XML writer/reader hash-fails.
     Complements xml_parse/xml_serialize, which stay on the custom
     expression-level path the reference's semantics require."""
-    out = tempfile.mkdtemp(prefix="jbp_xmlnative_")
+    out = scratch_dir("jbp_xmlnative_")
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "source", "n_chars")
     (
         docs.write.format("xml")
@@ -112,7 +111,7 @@ def q_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by a plan test (PartitionFilters in the scan node); this
     key value-checks that the pruned read returns exactly the filtered
     source rows."""
-    out = tempfile.mkdtemp(prefix="jbp_part_")
+    out = scratch_dir("jbp_part_")
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "source", "n_chars")
     docs.write.mode("overwrite").partitionBy("lang").parquet(out)
     back = spark.read.parquet(out).filter(F.col("lang").isin("en", "de"))
@@ -299,15 +298,12 @@ def q_compact_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data pass. Fixture reuses the binary_ingest payload dir so the
     DuckDB oracle lists the same files via read_blob."""
     import os as _os
-    import tempfile as _tf
 
     from journal_batch_processer_spark.queries.llmops import (
         _materialize_blobs,
     )
 
-    _materialize_blobs(sf_dir)
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-    d = _os.path.join(_tf.gettempdir(), f"jbp_blobs_{tag}")
+    d = _materialize_blobs(sf_dir)
     files = (
         spark.read.format("binaryFile")
         .load(_os.path.join(d, "*.bin"))
@@ -337,9 +333,7 @@ def _compact_plan_sql() -> str:
         _materialize_blobs,
     )
 
-    sf_dir = _os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = oracle_sf_dir()
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     _materialize_blobs(sf_dir)
     return f"""
@@ -371,7 +365,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema, null-filling, and values all hash-check. At 100 TB schema
     merging is metadata-only (footers), never a data rewrite — which
     is exactly why additive evolution is the only kind a lake allows."""
-    out = tempfile.mkdtemp(prefix="jbp_evo_")
+    out = scratch_dir("jbp_evo_")
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars")
     gen1 = docs.filter(F.col("doc_id") % 2 == 0)
     gen2 = docs.filter(F.col("doc_id") % 2 == 1).withColumn(

@@ -24,6 +24,13 @@ def small_input(n: int | None, bound: int) -> bool:
     return n is not None and n <= bound
 
 
+def oracle_sf_dir() -> str:
+    """The sf dir the lazy DuckDB-oracle builders train on and build
+    fixtures for (SPARK_GRAFT_ORACLE_SF_DIR; the oracle runs at one
+    fixed scale, sf0.01 unless set). The only reader of that var."""
+    return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+
+
 def env_int(name: str, default: int | None = None) -> int | None:
     """Integer value of env var ``name``, or ``default`` when it is
     unset or empty. Fails early — naming the variable and its value —

@@ -78,3 +78,17 @@ def test_schema_memo_stays_within_cap(spark, tmp_path, monkeypatch):
         assert "vec_id" in schema.fieldNames()
         assert 1 <= len(jobs._SCHEMA_MEMO) <= 2
 
+
+
+def test_train_memo_stays_within_cap(tmp_path, monkeypatch):
+    from journal_batch_processer_spark.operators import similarity
+
+    monkeypatch.setattr(metadata, "MEMO_MAX", 2)
+    monkeypatch.setattr(similarity, "_TRAINED", {})
+    for i in range(5):
+        p = tmp_path / f"emb{i}.parquet"
+        p.write_bytes(b"x" * (i + 1))
+        got = similarity._train_memo(str(p), "t", (), lambda: [i])
+        got.append("caller mutation")  # a copy: the memo stays clean
+        assert similarity._train_memo(str(p), "t", (), lambda: None) == [i]
+        assert 1 <= len(similarity._TRAINED) <= 2

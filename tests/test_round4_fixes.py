@@ -12,11 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
-from journal_batch_processer_spark.fixture_cache import (
-    is_fresh,
-    mark_fresh,
-    source_fingerprint,
-)
+from journal_batch_processer_spark.metadata import fixture_dir
 from journal_batch_processer_spark.queries.llmops import _parse_byte_size
 from journal_batch_processer_spark.session import load_events, normalize_events_ts
 
@@ -114,27 +110,33 @@ def test_fixture_cache_invalidates_on_source_change(tmp_path):
     src = tmp_path / "src.parquet"
     src.write_bytes(b"v1-bytes")
     cache = tmp_path / "cache"
-    cache.mkdir()
+    builds = []
 
-    fp1 = source_fingerprint(str(src))
-    assert not is_fresh(str(cache), fp1)
-    mark_fresh(str(cache), fp1)
-    assert is_fresh(str(cache), fp1)
+    def build():
+        cache.mkdir()
+        (cache / "copy").write_bytes(src.read_bytes())
+        builds.append(1)
+
+    def ensure():
+        return fixture_dir(str(cache), "copy-v1", [str(src)], build)
+
+    assert ensure() == str(cache) and len(builds) == 1  # unstamped: built
+    ensure()
+    assert len(builds) == 1  # stamped: reused
 
     # regenerate the source (different size ⇒ different fingerprint
     # even if mtime granularity collapses)
     src.write_bytes(b"v2-bytes-longer")
-    fp2 = source_fingerprint(str(src))
-    assert fp2 != fp1
-    assert not is_fresh(str(cache), fp2)
+    ensure()
+    assert len(builds) == 2
+    assert (cache / "copy").read_bytes() == b"v2-bytes-longer"
 
 
-def test_fixture_cache_missing_source_distinct(tmp_path):
-    present = tmp_path / "a"
-    present.write_bytes(b"x")
-    assert source_fingerprint(str(present)) != source_fingerprint(
-        str(tmp_path / "nope")
-    )
+def test_fixture_cache_missing_source_not_stamped(tmp_path):
+    cache = tmp_path / "cache"
+    with pytest.raises(FileNotFoundError):
+        fixture_dir(str(cache), "k", [str(tmp_path / "nope")], cache.mkdir)
+    assert not cache.exists()  # nothing built, so nothing stamped
 
 
 # ---------------------------------------------------------------------------

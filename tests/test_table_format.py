@@ -27,6 +27,37 @@ def fixture_table(spark):
     return SnapshotTable(root)
 
 
+def test_fixture_table_rebuilds_after_in_place_source_rewrite(
+    spark, tmp_path, monkeypatch
+):
+    """Rewriting events.parquet in place (same path, fewer rows) must
+    rebuild the fixture table, not serve the old rows."""
+    import shutil
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # own root
+    sf = tmp_path / "sf_rewrite"
+    shutil.copytree(SF_DIR, sf)
+    src = sf / "events.parquet"
+    os.chmod(src, 0o644)  # the copy keeps a read-only fixture's mode
+
+    def expected(ev):  # all events + id%1000==0 inserts + ==1 gen-2
+        ids = ev.column("event_id").to_pylist()
+        return len(ids) + sum(1 for i in ids if i % 1000 in (0, 1))
+
+    def table_rows():
+        root = lakehouse.materialize_table(spark, str(sf))
+        return SnapshotTable(root).read(spark).count()
+
+    ev = pq.read_table(src)
+    assert table_rows() == expected(ev)
+    half = ev.slice(0, ev.num_rows // 2)
+    pq.write_table(half, src)  # in place: same path, fewer rows
+    assert table_rows() == expected(half) < expected(ev)
+
+
 def _mk(spark, tmp_path, name="t"):
     t = SnapshotTable.create(
         str(tmp_path / name),

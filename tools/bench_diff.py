@@ -23,9 +23,9 @@ import os
 import statistics
 import sys
 
-RUNS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench_runs"
-)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import RUNS_DIR  # noqa: E402
 
 
 def load_runs(runs_dir: str) -> list[tuple[str, dict]]:
