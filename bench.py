@@ -237,7 +237,8 @@ def open_session(app: str):
     """``(spark, sf_dir)``: a session over $SPARK_GRAFT_SF_DIR after the
     shared warm-up (JVM + parquet footer reads)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app)
+    # no console progress bars: they share stderr with the per-key lines
+    spark = get_spark(app, extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
     return spark, sf_dir

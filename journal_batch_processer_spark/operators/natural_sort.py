@@ -6,9 +6,12 @@ with series/volume numbers regex-extracted from the Description so that
 Description column it sorts by MMS ID alone (:295-297).
 
 Spark-first shape: compute the two numeric keys as expressions once
-(they are reused by the year-imputation grouping), then a declarative
-``orderBy`` — one range-partitioned shuffle, executed by Tungsten sort,
-AQE-coalesced. MMS ID compares as a STRING, faithfully.
+(they are reused by the year-imputation grouping), then sort on the key
+list that ``natural_keys`` names — the one definition of the order.
+``natural_sort`` sorts globally with ``orderBy`` (one range-partitioned
+shuffle); ``pipeline.split_stage`` reaches the same order with a range
+partition by MMS ID alone plus a partition-local sort on the same keys.
+MMS ID compares as a STRING, faithfully.
 """
 
 from __future__ import annotations
@@ -34,11 +37,25 @@ def _int_group(desc: Column, idx: int) -> Column:
 
 def with_sort_keys(df: DataFrame, desc_col: str = "Description") -> DataFrame:
     """Materialize the numeric sort keys as columns (computed once,
-    shared by orderBy and the per-group imputation ordering)."""
+    shared by the natural-order sort and the per-group imputation
+    ordering)."""
     desc = F.coalesce(F.col(desc_col), F.lit(""))
     return df.withColumns(
         {PRE_VOL_COL: _int_group(desc, 1), VOL_COL: _int_group(desc, 2)}
     )
+
+
+def natural_keys(
+    columns: list[str], mms_col: str = "MMS ID", desc_col: str = "Description"
+) -> list[str]:
+    """The natural-order key columns: ``(MMS ID, series#, volume#,
+    Description)`` when ``columns`` holds a Description (the numeric
+    keys must be materialized by ``with_sort_keys``), else MMS ID
+    alone. The title comes first, so the remaining keys are the order
+    within one title."""
+    if desc_col in columns:
+        return [mms_col, PRE_VOL_COL, VOL_COL, desc_col]
+    return [mms_col]
 
 
 def natural_sort(
@@ -51,16 +68,11 @@ def natural_sort(
     drops them. ``extra_tiebreakers`` makes the order total when
     Descriptions collide (the reference relies on stable sort + file
     order; a distributed engine needs an explicit key)."""
-    added = False
-    if desc_col in df.columns:
-        if PRE_VOL_COL not in df.columns:
-            df = with_sort_keys(df, desc_col)
-            added = True
-        keys = [F.col(mms_col), F.col(PRE_VOL_COL), F.col(VOL_COL), F.col(desc_col)]
-    else:
-        keys = [F.col(mms_col)]
-    keys += [F.col(c) for c in (extra_tiebreakers or [])]
-    out = df.orderBy(*keys)
+    added = desc_col in df.columns and PRE_VOL_COL not in df.columns
+    if added:
+        df = with_sort_keys(df, desc_col)
+    keys = natural_keys(df.columns, mms_col, desc_col) + (extra_tiebreakers or [])
+    out = df.orderBy(*[F.col(c) for c in keys])
     if added:
         out = out.drop(PRE_VOL_COL, VOL_COL)
     return out

@@ -22,7 +22,8 @@ backward scan re-reads repaired state). That propagation makes the
 exact computation a per-group sequential algorithm, not a window
 function — in Spark: ``groupBy(MMS ID).applyInPandas`` (groups are the
 items of one serial title — tens of rows — so the Arrow batch per
-group is tiny and the shuffle is a clean hash partition by MMS ID).
+group is tiny; any clustering by MMS ID, such as ``split_stage``'s
+range partition, serves as the grouping shuffle).
 
 A pure-window fast path (`year_impute_window`) covers the common case
 where no 2-digit year needs a *repaired* row as its anchor; it stays
@@ -141,9 +142,12 @@ def year_impute_exact(
     chron_col: str = "Chron I",
     notes_col: str = "Notes",
 ) -> DataFrame:
-    """Semantics-exact path: hash-partition by MMS ID, per-group
-    sequential pass via Arrow (``applyInPandas``). ``order_cols`` must
-    reproduce the natural-sort order within the group."""
+    """Semantics-exact path: per-group sequential pass via Arrow
+    (``groupBy(group_col).applyInPandas``). Any input clustering by
+    ``group_col`` satisfies the grouping with no exchange of its own —
+    ``split_stage`` feeds it a range partition by MMS ID; otherwise
+    Spark adds a hash partition. ``order_cols`` must reproduce the
+    natural-sort order within the group."""
     order_cols = [c for c in order_cols if c in df.columns]
     schema = df.schema
 

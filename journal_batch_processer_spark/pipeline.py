@@ -5,9 +5,16 @@ lazy in-memory handoff instead of a CSV materialization per stage —
 one Catalyst plan end-to-end unless the caller explicitly writes the
 intermediate (``write_stage_csv``) to mimic stage artifacts.
 
-Shuffle budget for the whole pipeline (SURVEY.md §3): exactly two —
-the natural-sort range partition and the year-impute hash partition by
-MMS ID — plus the enrich join in update. Everything else is narrow.
+Shuffle budget for the whole pipeline (SURVEY.md §3): one range
+partition by MMS ID in split, plus the enrich join in update.
+Everything else is narrow. That one shuffle serves both consumers of
+the reference's sort-then-adjacent-scan: each title lands whole in one
+partition, which the per-title year imputation needs, and partitions
+hold ascending title ranges, so a partition-local sort yields the
+global natural order. A separate hash partition for the imputation
+under a range partition for the sort ran the Python imputation twice
+per pass, because a range exchange runs its input once to sample its
+bounds and again to shuffle.
 """
 
 from __future__ import annotations
@@ -30,7 +37,7 @@ from journal_batch_processer_spark.operators.merge import field_merge
 from journal_batch_processer_spark.operators.natural_sort import (
     PRE_VOL_COL,
     VOL_COL,
-    natural_sort,
+    natural_keys,
     with_sort_keys,
 )
 from journal_batch_processer_spark.operators.routing import Routed, error_route
@@ -64,35 +71,41 @@ def split_stage(
     strict_reference_mode: bool = False,
     exact_year_impute: bool = True,
 ) -> DataFrame:
-    """Defaults → regex extraction → natural sort → barcode flags →
-    year imputation → month normalization (BatchUpdate.py:189-423)."""
+    """Defaults → range partition by MMS ID → regex extraction →
+    barcode flags → year imputation → month normalization → natural
+    order (BatchUpdate.py:189-423).
+
+    The reference sorts the file, then scans adjacent rows of one title.
+    Here the one shuffle is ``repartitionByRange("MMS ID")``, placed
+    before the regex so that the range partitioner's bound-sampling
+    pass re-reads only the input scan, and the regex runs in parallel
+    after it. The imputation reuses that clustering with no exchange of
+    its own, and ``sortWithinPartitions`` on ``natural_keys`` gives the
+    same global order as ``natural_sort``'s ``orderBy``."""
     contract = contract.expand_dependents()
     df = ensure_columns(df, contract)
     df = ensure_extra(df, "Pattern", "Notes")
     df = fill_blank_defaults(df, contract, strict_reference_mode)
     df = overwrite_constants(df, contract, strict_reference_mode)
+    df = df.repartitionByRange("MMS ID")
 
     has_desc = "Description" in df.columns
     if has_desc:
-        df = desc_extract(df)
-        # Sort keys computed once; reused by orderBy AND the per-group
-        # imputation ordering (SURVEY.md §3 — the reference's
-        # sort-then-adjacent-scan collapses to this).
-        df = with_sort_keys(df)
+        df = with_sort_keys(desc_extract(df))
+    keys = natural_keys(df.columns)
 
     df = flag_missing_barcode(df)
     df = flag_i_barcode(df)
 
     if has_desc:
         impute = year_impute_exact if exact_year_impute else year_impute_window
-        df = impute(df)
+        df = impute(df, order_cols=keys[1:])
         df = df.withColumn(
             "Chron J", month_normalize(F.col("Chron J"), strict_reference_mode)
         )
 
-    # the sort keys computed above are reused, then dropped (a no-op
-    # without Description)
-    return natural_sort(df).drop(PRE_VOL_COL, VOL_COL)
+    # the sort keys are dropped after the sort (a no-op without Description)
+    return df.sortWithinPartitions(*keys).drop(PRE_VOL_COL, VOL_COL)
 
 
 class UpdateResult(NamedTuple):

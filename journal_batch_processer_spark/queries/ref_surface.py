@@ -30,8 +30,7 @@ from journal_batch_processer_spark.operators.flags import (
 )
 from journal_batch_processer_spark.operators.merge import merge_flat
 from journal_batch_processer_spark.operators.natural_sort import (
-    PRE_VOL_COL,
-    VOL_COL,
+    natural_keys,
     with_sort_keys,
 )
 from journal_batch_processer_spark.operators.routing import error_condition
@@ -604,9 +603,7 @@ FROM lineitem
 
 def q_natural_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     iv = with_sort_keys(item_view(spark, sf_dir))
-    w = Window.orderBy(
-        F.col("MMS ID"), F.col(PRE_VOL_COL), F.col(VOL_COL), F.col("Description")
-    )
+    w = Window.orderBy(*[F.col(c) for c in natural_keys(iv.columns)])
     return iv.select(
         F.col("o_orderkey"),
         F.col("MMS ID").alias("mms_id"),

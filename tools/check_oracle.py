@@ -316,6 +316,7 @@ def main() -> int:
         "check-oracle",
         master=os.environ.get("SPARK_GRAFT_CHECK_MASTER", "local[8]"),
         shuffle_partitions=int(os.environ.get("SPARK_GRAFT_CHECK_SHUFFLE", "8")),
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
